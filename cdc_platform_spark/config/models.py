@@ -191,6 +191,16 @@ class PipelineConfig(BaseModel, extra="forbid"):
                 "dlq_path is not supported with envelope=passthrough "
                 "(the DLQ quarantine schema is the CDC event envelope)"
             )
+        # sinks of one micro-batch write concurrently: a shared or nested
+        # output directory is a race (CdcPipeline refuses it too)
+        from cdc_platform_spark.streaming.pipeline import overlapping_roots
+
+        roots = [(s.id, s.path) for s in enabled]
+        if self.dlq_path is not None:
+            roots.append(("dlq_path", self.dlq_path))
+        clashes = overlapping_roots(roots)
+        if clashes:
+            raise ValueError(f"sink/DLQ paths must not be equal or nested: {clashes}")
         return self
 
     def provisioned_topics(self, dlq_suffix: str = "dlq") -> list[str]:

@@ -161,20 +161,17 @@ def materialize(df, eager: bool = False):
     table, then read it back".  Row set and values are identical either
     way; only durability (and the write cost that buys it) changes.
     """
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "") not in ("", "0", "false"):
+    env_on = os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "").lower()
+    if env_on not in ("", "0", "false"):
         return df.checkpoint(eager=eager)
-    spark = df.sparkSession
-    conf_on = getattr(spark, "_cdc_reliable_checkpoint", None)
-    if conf_on is None:  # one conf round-trip per session, then cached
-        try:
-            conf_on = (
-                spark.conf.get("spark.cdc.reliableCheckpoint", "false").lower()
-                == "true"
-            )
-        except Exception:  # pragma: no cover — conf service unavailable
-            conf_on = False
-        spark._cdc_reliable_checkpoint = conf_on
-    if conf_on:
+    # read on every call (one conf round-trip): a switch flipped after the
+    # first materialization takes effect, and sink threads of a concurrent
+    # fan-out share no cached session state
+    try:
+        conf_on = df.sparkSession.conf.get("spark.cdc.reliableCheckpoint", "false")
+    except Exception:  # pragma: no cover — conf service unavailable
+        conf_on = "false"
+    if conf_on.lower() == "true":
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 

@@ -20,7 +20,8 @@ two deliberate design upgrades over the reference:
 
 Layout:
     <root>/data/<uuid>/part-*.parquet     (immutable file groups)
-    <root>/snapshots/<seq>-<id>.json      {id, parent, ts_ms, op, files, rows}
+    <root>/snapshots/<seq>-<id>.json      {id, parent, ts_ms, op, files, rows,
+                                           stats, schema}
     <root>/HEAD                           current snapshot id
 """
 
@@ -41,6 +42,24 @@ def _json_safe(v):
     if v is None or isinstance(v, (int, float, str, bool)):
         return v
     return str(v)
+
+
+def _as_read(schema) -> dict:
+    """``schema``'s JSON form as a parquet scan returns it: every column,
+    nested field, array element and map value reads back nullable."""
+
+    def walk(v):
+        if isinstance(v, list):
+            return [walk(x) for x in v]
+        if not isinstance(v, dict):
+            return v
+        v = {k: walk(x) for k, x in v.items()}
+        for k in ("nullable", "containsNull", "valueContainsNull"):
+            if k in v:
+                v[k] = True
+        return v
+
+    return walk(schema.jsonValue())
 
 
 class VersionedTable(TableFormat):
@@ -95,7 +114,10 @@ class VersionedTable(TableFormat):
                 return s
         raise KeyError(f"unknown snapshot {snapshot_id!r}")
 
-    def _commit(self, files: list[str], op: str, rows: int) -> str:
+    def _commit(self, files: list[str], op: str, rows: int, schema: dict | None = None) -> str:
+        """``schema`` is the table schema after this commit (JSON form);
+        when omitted — rewrites that keep the table's columns — the
+        parent's schema carries forward."""
         sid = uuid.uuid4().hex[:16]
         # seq must be max(existing)+1, not a file count: after expire_snapshots
         # deletes old manifests, a count would reuse a seq taken by a surviving
@@ -105,7 +127,8 @@ class VersionedTable(TableFormat):
         seq = (max(int(n.split("-", 1)[0]) for n in existing) + 1) if existing else 0
         # carry stats forward: inherited groups keep the parent's manifest stats
         parent_id = self.current_snapshot_id()
-        parent_stats = self._snapshot(parent_id).get("stats", {}) if parent_id else {}
+        parent = self._snapshot(parent_id) if parent_id else {}
+        parent_stats = parent.get("stats", {})
         stats = {g: (self._group_stats.get(g) or parent_stats.get(g) or {}) for g in files}
         snap = {
             "id": sid,
@@ -116,6 +139,9 @@ class VersionedTable(TableFormat):
             "rows": rows,
             "stats": stats,
         }
+        schema = schema or parent.get("schema")
+        if schema is not None:
+            snap["schema"] = schema
         path = f"{self.root}/snapshots/{seq:06d}-{sid}.json"
         with open(f"{path}.tmp", "w") as f:
             json.dump(snap, f)
@@ -136,18 +162,21 @@ class VersionedTable(TableFormat):
         ]
 
     def _write_group(self, df: DataFrame) -> tuple[str, int]:
-        group = f"{self.root}/data/{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(group)
-        written = self.spark.read.parquet(group)
-        # per-group column stats for scan pruning (the role of Iceberg
-        # manifest entries, ref maintenance.py:149-156 metadata-only planning)
+        """Write one immutable file group.  Its row count and per-column
+        min/max (scan-pruning stats: the role of Iceberg manifest entries,
+        ref maintenance.py:149-156 metadata-only planning) are observed
+        on the write job itself — no read-back or stats job."""
+        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        statable = self._statable(written.schema)
+        group = f"{self.root}/data/{uuid.uuid4().hex}"
+        statable = self._statable(df.schema)
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in statable:
             aggs += [F.min(c).alias(f"min__{c}"), F.max(c).alias(f"max__{c}")]
-        row = written.agg(*aggs).collect()[0].asDict()
+        obs = Observation(f"group-{uuid.uuid4().hex}")
+        df.observe(obs, *aggs).write.mode("overwrite").parquet(group)
+        row = obs.get
         stats = {
             c: {"min": _json_safe(row[f"min__{c}"]), "max": _json_safe(row[f"max__{c}"])}
             for c in statable
@@ -219,8 +248,7 @@ class VersionedTable(TableFormat):
         of read_where and compaction can run per partition (L3).
         """
         cur = self.current_snapshot_id()
-        if cur is not None:
-            self._check_evolution(df)
+        schema = self._check_evolution(df) if cur is not None else _as_read(df.schema)
         files = list(self._snapshot(cur)["files"]) if cur else []
         prev_rows = self._snapshot(cur)["rows"] if cur else 0
         added_rows = 0
@@ -245,26 +273,37 @@ class VersionedTable(TableFormat):
                 raise RuntimeError(
                     f"partitioned append wrote {added_rows} rows, batch has {expected}"
                 )
-        return self._commit(files, "append", prev_rows + added_rows)
+        return self._commit(files, "append", prev_rows + added_rows, schema)
 
-    def _check_evolution(self, df: DataFrame) -> None:
+    def _check_evolution(self, df: DataFrame) -> dict:
         """Additive schema evolution (the reference's documented Iceberg sink
         behavior, README.md:478-486: "Iceberg auto-evolves via PyIceberg"):
         a batch may ADD columns (old rows read as null) or OMIT columns
         (new rows read as null); a changed type for an existing column is an
         error — the reference's Postgres sink errors such batches to the DLQ
-        rather than corrupting the table."""
-        current = {f.name: f.dataType for f in self.read().schema.fields}
+        rather than corrupting the table.  Returns the table schema after
+        appending ``df``.
+
+        The HEAD schema comes from its manifest; a manifest written before
+        manifests recorded it falls back to a schema-merging scan."""
+        from pyspark.sql.types import StructType
+
+        table = self._snapshot(self.current_snapshot_id()).get("schema") or _as_read(
+            self.read().schema
+        )
+        current = {f.name: f.dataType for f in StructType.fromJson(table).fields}
         for f in df.schema.fields:
             if f.name in current and f.dataType != current[f.name]:
                 raise ValueError(
                     f"incompatible schema evolution for column {f.name!r}: "
                     f"{current[f.name].simpleString()} -> {f.dataType.simpleString()}"
                 )
+        added = [f for f in _as_read(df.schema)["fields"] if f["name"] not in current]
+        return {**table, "fields": table["fields"] + added}
 
     def overwrite(self, df: DataFrame) -> str:
         group, rows = self._write_group(df)
-        return self._commit([group], "overwrite", rows)
+        return self._commit([group], "overwrite", rows, _as_read(df.schema))
 
     # --- read paths ----------------------------------------------------------
     def read(self, snapshot_id: str | None = None) -> DataFrame:

@@ -90,9 +90,16 @@ def progress_metrics(query) -> dict:
     }
 
 
-def health(queries: list, sinks: dict[str, object] | None = None) -> dict:
+def health(
+    queries: list,
+    sinks: dict[str, object] | None = None,
+    sink_status: dict[str, dict] | None = None,
+) -> dict:
     """Aggregate readiness like the reference's /readyz (M4): any failed
-    component -> not ready."""
+    component -> not ready.  ``sink_status`` is
+    ``CdcPipeline.sink_status``: a sink whose last write failed (its
+    batch was quarantined) reports ``"error"`` until a later batch
+    commits."""
     components = {}
     ready = True
     for q in queries:
@@ -100,7 +107,9 @@ def health(queries: list, sinks: dict[str, object] | None = None) -> dict:
         components[f"query:{q.name or q.id}"] = "ok" if ok else "error"
         ready &= ok
     for sink_id in (sinks or {}):
-        components[f"sink:{sink_id}"] = "ok"
+        ok = (sink_status or {}).get(sink_id, {}).get("ok", True)
+        components[f"sink:{sink_id}"] = "ok" if ok else "error"
+        ready &= ok
     return {"status": "ready" if ready else "unhealthy", "components": components}
 
 
@@ -218,7 +227,8 @@ class HealthServer:
       endpoint, matching the reference's aggregate-readiness contract
       (reference pipeline/runner.py:390-416).
 
-    ``status_fn`` is typically ``lambda: health(queries, sinks)``.
+    ``status_fn`` is typically
+    ``lambda: health(queries, pipeline.sinks, sink_status=pipeline.sink_status)``.
     """
 
     def __init__(self, status_fn, host: str = "127.0.0.1", port: int = 0) -> None:

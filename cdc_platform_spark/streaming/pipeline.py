@@ -35,9 +35,12 @@ import shutil
 import time
 import traceback
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from cdc_platform_spark.functions import materialize
 from pyspark.sql import functions as F
@@ -157,16 +160,21 @@ def _commit_swap(path: str, tmp: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def pruned_bucket_read(spark: SparkSession, path: str, buckets: DataFrame) -> DataFrame:
+def pruned_bucket_read(
+    spark: SparkSession, path: str, buckets: DataFrame, schema=None
+) -> DataFrame:
     """Read a ``bucket=<i>`` partitioned state dir restricted to the given
     buckets: broadcast LEFT SEMI join on the partition column, whose build
     side carries the DPP-triggering selective filter (``bucket >= 0`` is
     semantically a no-op — pmod is non-negative — but marks the build side
     selective, which Spark's dynamic-partition-pruning insertion heuristic
     requires).  THE pruning recipe, shared by every bucketed sink and
-    derived view so it cannot drift; untouched buckets are never read."""
+    derived view so it cannot drift; untouched buckets are never read.
+    A known ``schema`` (DDL, ``bucket`` included) spares the scan its
+    schema-inference job."""
     pruned = buckets.select("bucket").distinct().filter(F.col("bucket") >= 0)
-    return spark.read.parquet(path).join(F.broadcast(pruned), "bucket", "leftsemi")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path).join(F.broadcast(pruned), "bucket", "leftsemi")
 
 
 def spark_hash_bucket(spark: SparkSession, value, dtype: str, n_buckets: int) -> int:
@@ -653,9 +661,18 @@ class BucketedUpsertSink:
         )
         if not have_state:
             return upd
-        current = pruned_bucket_read(upd.sparkSession, self.path, upd).select(
-            *self._COLS, "bucket"
-        )
+        # The declared state schema spares the scan its schema-inference
+        # job (one per batch).  It holds only when the batch carries the
+        # declared types — the state is the union of such batches; a batch
+        # that differs (int offsets under a bigint declaration) keeps the
+        # inferring scan, which reads whatever types the state was stored in.
+        cols = [*self._COLS, "bucket"]
+        schema = f"{self._STATE_SCHEMA}, bucket int"
+        declared = {f.name: f.dataType.simpleString() for f in StructType.fromDDL(schema).fields}
+        batch = upd.select(*cols).schema.fields
+        if any(declared.get(f.name) != f.dataType.simpleString() for f in batch):
+            schema = None
+        current = pruned_bucket_read(upd.sparkSession, self.path, upd, schema).select(*cols)
         return current.unionByName(upd)
 
     def _updates(self, batch: DataFrame) -> DataFrame:
@@ -1040,6 +1057,10 @@ class BucketedAggregatingSink(BucketedUpsertSink):
     # apply to out-of-band (no-batch-id) replays
     is_idempotent = False
     _COLS = AggregatingSink._COLS
+    _STATE_SCHEMA = (
+        "pk long, n_events long, value_sum decimal(18,2), value_min double, "
+        "value_max double, last_offset long"
+    )
 
     def __init__(self, path: str, n_buckets: int = 16) -> None:
         super().__init__(path, n_buckets)
@@ -1196,7 +1217,10 @@ class DlqWriter:
             )
             .withColumn("dlq_error_message", F.lit(str(error)[:500]))
             .withColumn("dlq_error_type", F.lit(type(error).__name__))
-            .withColumn("dlq_error_stacktrace", F.lit(traceback.format_exc()[:2000]))
+            .withColumn(
+                "dlq_error_stacktrace",
+                F.lit("".join(traceback.format_exception(error))[:2000]),
+            )
             .withColumn("dlq_timestamp", F.lit(int(time.time() * 1000)))
             .withColumn("dlq_sink_id", F.lit(sink_id))
             .write.mode("append")
@@ -1350,6 +1374,35 @@ class TopicRouterSink:
                 sink.write(sub)
 
 
+def _output_roots(name: str, sink) -> list[tuple[str, str]]:
+    """(name, directory) for every place ``sink`` writes: its ``.path``
+    or its lakehouse ``.table.root``; a topic router contributes the
+    roots of its routed sinks."""
+    routes = getattr(sink, "routes", None)
+    if routes is not None:
+        subs = {**routes, "<fallback>": getattr(sink, "fallback", None)}
+        return [r for topic, sub in subs.items() if sub is not None
+                for r in _output_roots(f"{name}[{topic}]", sub)]
+    root = getattr(sink, "path", None)
+    if root is None:
+        root = getattr(getattr(sink, "table", None), "root", None)
+    return [(name, root)] if isinstance(root, str) else []
+
+
+def overlapping_roots(roots: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Name pairs whose output directories are equal or nested.  Sinks of
+    one micro-batch write concurrently, so a shared directory is a race:
+    one sink's stale-tmp sweep deletes another's in-flight tmp dir, or
+    two Hadoop ``_temporary`` dirs clash."""
+    norm = [(n, os.path.realpath(p)) for n, p in roots]
+    return [
+        (a, b)
+        for i, (a, pa) in enumerate(norm)
+        for b, pb in norm[i + 1:]
+        if pa == pb or pa.startswith(pb + os.sep) or pb.startswith(pa + os.sep)
+    ]
+
+
 @dataclass
 class CdcPipeline:
     """File-source streaming pipeline with multi-sink fan-out and DLQ.
@@ -1359,6 +1412,15 @@ class CdcPipeline:
     continuous deployment uses the same object with a processing-time
     trigger (and a Kafka source instead of files; the envelope transform
     and sink protocol are source-agnostic).
+
+    Fan-out: each micro-batch is materialized once, then every sink's
+    ``write`` (and the poison-row quarantine) runs concurrently on its
+    own thread — the reference's ``asyncio.gather`` over sinks.  Sinks
+    are isolated: a failing sink's batch is quarantined to the DLQ under
+    its own ``dlq_sink_id`` while the others commit, and ``sink_status``
+    records each sink's last outcome for readiness.  Because sinks write
+    at the same time, no two sinks (nor the DLQ) may share an output
+    directory or nest one inside another; the constructor refuses it.
     """
 
     spark: SparkSession
@@ -1392,6 +1454,37 @@ class CdcPipeline:
     # swallow their eventual replay.
     maintenance_every_n_batches: int | None = None
     tombstone_horizon_fn: object | None = None  # Callable[[], int | None]
+    # last write outcome per sink: {batch_id, ok, error} — what
+    # observability.health(sink_status=...) turns into readiness
+    sink_status: dict[str, dict] = field(default_factory=dict, init=False)
+
+    def __post_init__(self) -> None:
+        roots = [r for sid, sink in self.sinks.items() for r in _output_roots(sid, sink)]
+        if self.dlq is not None:
+            roots.append(("<dlq>", self.dlq.path))
+        clashes = overlapping_roots(roots)
+        if clashes:
+            raise ValueError(
+                f"sink output paths overlap: {clashes} — sinks write "
+                "concurrently, so each needs its own directory"
+            )
+
+    def _write_sink(self, sink, env: DataFrame, batch_id: int) -> None:
+        if getattr(sink, "wants_batch_id", False):
+            # batch-id-fenced sinks (AggregatingSink) need the micro-batch
+            # id to make their merge idempotent under at-least-once
+            # redelivery
+            sink.write(env, batch_id=batch_id)
+        else:
+            sink.write(env)
+
+    def _quarantine_poison(self, poison: DataFrame) -> None:
+        if poison.take(1):
+            self.dlq.write(
+                poison.drop("decode_error"),
+                "decode",
+                RuntimeError("undecodable frame (decode_error set)"),
+            )
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         if self.schema_monitor is not None:
@@ -1413,30 +1506,48 @@ class CdcPipeline:
         # replay recovers (the designed recovery; materialize() switches to
         # a reliable checkpoint on a cluster).
         env = materialize(env, eager=True)
+        poison = None
         if self.dlq is not None and "decode_error" in env.columns:
             poison = env.filter(F.col("decode_error").isNotNull())
-            if poison.take(1):
-                self.dlq.write(
-                    poison.drop("decode_error"),
-                    "decode",
-                    RuntimeError("undecodable frame (decode_error set)"),
-                )
             env = env.filter(F.col("decode_error").isNull())
         if "decode_error" in env.columns:
             env = env.drop("decode_error")
-        for sink_id, sink in self.sinks.items():
-            try:
-                if getattr(sink, "wants_batch_id", False):
-                    # batch-id-fenced sinks (AggregatingSink) need the
-                    # micro-batch id to make their merge idempotent
-                    # under at-least-once redelivery
-                    sink.write(env, batch_id=batch_id)
-                else:
-                    sink.write(env)
-            except Exception as e:  # noqa: BLE001 - per-sink isolation
-                if self.dlq is None:
-                    raise
-                self.dlq.write(env, sink_id, e)
+        # Concurrent fan-out: a micro-batch's sink writes are each a chain
+        # of small Spark jobs, bound by job latency rather than cores, so
+        # running them side by side overlaps that latency.  Each target is
+        # wrapped in the caller's thread-local Spark properties, so its
+        # jobs keep the caller's job group and description.
+        tasks = {sid: (self._write_sink, sink, env, batch_id) for sid, sink in self.sinks.items()}
+        if poison is not None:
+            tasks[None] = (self._quarantine_poison, poison)
+        with ThreadPoolExecutor(max_workers=max(1, len(tasks))) as pool:
+            futures = {
+                key: pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+                for key, (fn, *args) in tasks.items()
+            }
+        errors = {key: fut.exception() for key, fut in futures.items()}
+        for err in errors.values():
+            if err is not None and not isinstance(err, Exception):
+                raise err  # KeyboardInterrupt/SystemExit are not sink faults
+        for sink_id in self.sinks:
+            err = errors[sink_id]
+            self.sink_status[sink_id] = {
+                "batch_id": batch_id,
+                "ok": err is None,
+                "error": None if err is None else f"{type(err).__name__}: {str(err)[:500]}",
+            }
+        if errors.get(None) is not None:
+            # the poison rows were not quarantined: fail the batch so the
+            # stream replays it (idempotent sinks converge on the replay)
+            raise errors[None]
+        # per-sink isolation: quarantine each failed sink's batch, one DLQ
+        # append at a time, in sink declaration order
+        for sink_id in self.sinks:
+            if errors[sink_id] is None:
+                continue
+            if self.dlq is None:
+                raise errors[sink_id]
+            self.dlq.write(env, sink_id, errors[sink_id])
         if (
             self.maintenance_every_n_batches
             and (batch_id + 1) % self.maintenance_every_n_batches == 0
@@ -1493,3 +1604,4 @@ class CdcPipeline:
             .start()
         )
         query.awaitTermination()
+

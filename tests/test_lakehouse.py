@@ -505,3 +505,105 @@ def test_discard_snapshot_expired_parent_clears_head(spark, table):
     table.discard_snapshot(s2)
     assert table.current_snapshot_id() is None
     assert table.snapshots() == []
+
+
+def test_write_time_stats_equal_read_back(spark, table):
+    """Group stats are observed on the write job itself; they must equal
+    an aggregate over the written files, nulls, strings, doubles and
+    timestamps included (an all-null column's stats stay null)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from cdc_platform_spark.lakehouse.table import _json_safe
+
+    df = spark.sql(
+        """SELECT * FROM VALUES
+             (1L, 'b', 2.5D, TIMESTAMP'2024-03-01 10:00:00', CAST(NULL AS INT)),
+             (CAST(NULL AS BIGINT), 'it''s', CAST(NULL AS DOUBLE), CAST(NULL AS TIMESTAMP), CAST(NULL AS INT)),
+             (7L, CAST(NULL AS STRING), -0.5D, TIMESTAMP'2023-12-31 23:59:59.123456', CAST(NULL AS INT))
+           AS t(id, s, d, ts, none)"""
+    )
+    sid = table.append(df)
+    table.append(df.filter("id = 7"))
+    snap = table._snapshot(table.current_snapshot_id())
+    group = snap["files"][0]
+    assert table._snapshot(sid)["files"] == [group]
+    written = spark.read.parquet(group)
+    aggs = []
+    for c in written.columns:
+        aggs += [F.min(c).alias(f"min__{c}"), F.max(c).alias(f"max__{c}")]
+    row = written.agg(*aggs).first()
+    want = {
+        c: {"min": _json_safe(row[f"min__{c}"]), "max": _json_safe(row[f"max__{c}"])}
+        for c in written.columns
+    }
+    assert snap["stats"][group] == want
+    assert want["none"] == {"min": None, "max": None}
+    assert snap["rows"] == 4
+    # the manifest records the table schema as a parquet scan reads it
+    assert snap["schema"] == table.read().schema.jsonValue()
+    assert os.path.isdir(group)
+
+
+def test_append_is_one_spark_job(spark, table):
+    """An append onto an existing table runs only its write job: stats
+    ride on the write (Observation) and the evolution check reads the
+    manifest schema, not a schema-inference scan."""
+    table.append(_df(spark, 0, 10))
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("lakehouse-append-jobs", "lakehouse append")
+    try:
+        table.append(_df(spark, 10, 20))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("lakehouse-append-jobs")) == 1
+    assert table.read().count() == 20
+
+
+def test_check_evolution_without_manifest_schema_and_after_rollback(spark, tmp_path):
+    """Manifests written before the table schema was recorded fall back to
+    a scan; after a rollback the evolution check uses the schema of the
+    snapshot HEAD now points at."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "legacy")
+    t = VersionedTable(spark, root)
+    s1 = t.append(spark.range(3).select(F.col("id"), F.lit("a").alias("v")))
+    t.append(spark.range(3, 5).select(F.col("id"), F.lit("b").alias("v"), F.lit(1.5).alias("score")))
+    for name in os.listdir(f"{root}/snapshots"):
+        path = f"{root}/snapshots/{name}"
+        with open(path) as fh:
+            snap = json.load(fh)
+        del snap["schema"]
+        with open(path, "w") as fh:
+            json.dump(snap, fh)
+
+    legacy = VersionedTable(spark, root)  # fresh handle: no cached manifests
+    with pytest.raises(ValueError, match="incompatible schema evolution"):
+        legacy.append(spark.range(1).select(F.col("id"), F.lit(2).alias("score")))
+    s3 = legacy.append(spark.range(5, 6).select(F.col("id"), F.lit("c").alias("v")))
+    # the first commit after the legacy ones records the scanned schema
+    assert [f["name"] for f in legacy._snapshot(s3)["schema"]["fields"]] == ["id", "v", "score"]
+
+    legacy.rollback(s1)
+    # at s1 the table had no `score`: an int score is now a new column
+    s4 = legacy.append(spark.range(6, 7).select(F.col("id"), F.lit(2).alias("score")))
+    fields = {f["name"]: f["type"] for f in legacy._snapshot(s4)["schema"]["fields"]}
+    assert fields == {"id": "long", "v": "string", "score": "integer"}
+    assert legacy.read().count() == 4
+
+    # the same with recorded schemas: HEAD's manifest decides
+    t2 = VersionedTable(spark, str(tmp_path / "recorded"))
+    r1 = t2.append(spark.range(3).select(F.col("id")))
+    t2.append(spark.range(3, 4).select(F.col("id"), F.lit(1.5).alias("score")))
+    with pytest.raises(ValueError, match="incompatible schema evolution"):
+        t2.append(spark.range(4, 5).select(F.col("id"), F.lit("x").alias("score")))
+    t2.rollback(r1)
+    r3 = t2.append(spark.range(4, 5).select(F.col("id"), F.lit("x").alias("score")))
+    assert t2._snapshot(r3)["schema"]["fields"][1]["type"] == "string"

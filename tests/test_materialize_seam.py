@@ -53,10 +53,10 @@ def test_materialize_reliable_env_switch(spark, tmp_path, monkeypatch):
 
 def test_materialize_reliable_conf_switch(spark, tmp_path):
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt2"))
-    had_cache = hasattr(spark, "_cdc_reliable_checkpoint")
+    # the conf is read per call: a materialization BEFORE the switch must
+    # not pin the local form for the rest of the session
+    materialize(spark.range(3), eager=True)
     try:
-        if had_cache:
-            del spark._cdc_reliable_checkpoint
         spark.conf.set("spark.cdc.reliableCheckpoint", "true")
         out = materialize(spark.range(10), eager=True)
         assert out.count() == 10
@@ -68,8 +68,16 @@ def test_materialize_reliable_conf_switch(spark, tmp_path):
         assert ckpt_files, "conf switch did not engage the reliable checkpoint"
     finally:
         spark.conf.set("spark.cdc.reliableCheckpoint", "false")
-        if hasattr(spark, "_cdc_reliable_checkpoint"):
-            del spark._cdc_reliable_checkpoint
+
+
+def test_materialize_reliable_env_switch_is_case_insensitive(spark, tmp_path, monkeypatch):
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt3"))
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "FALSE")
+    out = materialize(spark.range(10), eager=True)
+    assert out.count() == 10
+    assert not any(files for _, _, files in os.walk(tmp_path / "ckpt3")), (
+        "SPARK_GRAFT_RELIABLE_CHECKPOINT=FALSE engaged the reliable checkpoint"
+    )
 
 
 def test_sorted_view_plan_child_seam(spark):

@@ -1417,3 +1417,40 @@ def test_bucketed_commit_rolls_back_on_partial_failure(spark, tmp_path, monkeypa
     assert sorted(map(tuple, sink.state(spark).collect())) == sorted(
         map(tuple, ref.state(spark).collect())
     )
+
+
+def test_bucketed_merge_plans_read_state_without_inference(spark, tmp_path):
+    """Planning the upsert and aggregate merges runs no Spark job: the
+    state scan takes the batch's column types instead of a per-batch
+    schema-inference job, and the stored column types stay the batch's."""
+    from cdc_platform_spark.streaming.pipeline import (
+        BucketedAggregatingSink,
+        BucketedUpsertSink,
+        to_envelope,
+    )
+
+    env = to_envelope(spark.read.parquet(f"{SF_SMOKE}/events.parquet"))
+    upsert = BucketedUpsertSink(str(tmp_path / "u"), n_buckets=8)
+    agg = BucketedAggregatingSink(str(tmp_path / "a"), n_buckets=8)
+    upsert.write(env)
+    agg.write(env, batch_id=0)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("merge-planning", "plan the bucketed merges")
+    try:
+        plans = [upsert._merged(env.filter("pk = 1")), agg._merged(env.filter("pk = 1"), batch_id=1)]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("merge-planning") == []
+    for plan in plans:
+        assert "dynamicpruning" in plan._jdf.queryExecution().executedPlan().toString().lower()
+    upsert.write(env.filter("pk = 1"))
+    assert upsert.raw_state(spark).schema == upsert._merged(env.filter("pk = 2")).schema
+    # the aggregate sink declares its own state schema (the empty-state
+    # fallback of raw_state/pruned_read)
+    stored = spark.read.parquet(agg.path).drop("bucket").schema
+    assert [(f.name, f.dataType.simpleString()) for f in stored.fields] == [
+        (f.name, f.dataType.simpleString())
+        for f in spark.createDataFrame([], agg._STATE_SCHEMA).schema.fields
+    ]
