@@ -45,6 +45,28 @@ def _collect_stable(build, fingerprint, attempts: int = 4):
     return run_stable(lambda: build().collect(), fingerprint, attempts=attempts)
 
 
+def _serve_view(sink_cls, root: str, n_buckets: int, what: str, build) -> int:
+    """The scaffold of the view serve verbs (span-, session-,
+    hourly-stats): refuse a missing root (a typo'd path would otherwise
+    read as an empty view), open the sink read-only, collect
+    ``build(sink)`` under check-read-recheck, print JSON lines.  Exit 1
+    for a missing root, 2 (retriable) while a writer is mid-commit."""
+    from cdc_platform_spark.streaming.pipeline import StateInFlightError
+
+    if not os.path.isdir(root):
+        print(json.dumps({"error": f"no {what} state at {root}"}), file=sys.stderr)
+        return 1
+    sink = sink_cls(root, n_buckets=n_buckets, read_only=True)
+    try:
+        rows = _collect_stable(lambda: build(sink), sink.state_fingerprint)
+    except StateInFlightError as exc:
+        print(json.dumps({"error": str(exc), "retriable": True}), file=sys.stderr)
+        return 2
+    for row in rows:
+        print(json.dumps(row.asDict(), default=str))
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="cdc-spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -617,20 +639,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "span-stats":
         from pyspark.sql import functions as F
 
-        from cdc_platform_spark.streaming.pipeline import StateInFlightError
         from cdc_platform_spark.streaming.span_index import BucketedSpanIndexSink
 
-        if not os.path.isdir(args.span_root):
-            print(
-                json.dumps({"error": f"no span index state at {args.span_root}"}),
-                file=sys.stderr,
-            )
-            return 1
-        sink = BucketedSpanIndexSink(
-            args.span_root, n_buckets=args.n_buckets, read_only=True
-        )
-
-        def build_stats():
+        def build_stats(sink):
             # --doc-id is a bucket-pruned POINT serve inside the sink
             # (single-bucket file listing), not a full-scan-then-filter
             df = sink.span_stats(spark, args.doc_id)
@@ -640,34 +651,18 @@ def main(argv: list[str] | None = None) -> int:
                 args.limit
             )
 
-        try:
-            rows = _collect_stable(build_stats, sink.state_fingerprint)
-        except StateInFlightError as exc:
-            print(json.dumps({"error": str(exc), "retriable": True}), file=sys.stderr)
-            return 2
-        for row in rows:
-            print(json.dumps(row.asDict(), default=str))
-        return 0
+        return _serve_view(
+            BucketedSpanIndexSink, args.span_root, args.n_buckets, "span index", build_stats
+        )
 
     if args.cmd == "session-stats":
         from pyspark.sql import functions as F
 
-        from cdc_platform_spark.streaming.pipeline import StateInFlightError
         from cdc_platform_spark.streaming.session_index import (
             BucketedSessionStatsSink,
         )
 
-        if not os.path.isdir(args.session_root):
-            print(
-                json.dumps({"error": f"no session index state at {args.session_root}"}),
-                file=sys.stderr,
-            )
-            return 1
-        sink = BucketedSessionStatsSink(
-            args.session_root, n_buckets=args.n_buckets, read_only=True
-        )
-
-        def build_sessions():
+        def build_sessions(sink):
             # --user-id is a bucket-pruned POINT serve inside the sink
             # (single-bucket file listing), not a full-scan-then-filter
             df = sink.session_stats(spark, args.user_id)
@@ -675,14 +670,13 @@ def main(argv: list[str] | None = None) -> int:
                 F.col("n_events").desc(), "user_id", "session_start_us"
             ).limit(args.limit)
 
-        try:
-            rows = _collect_stable(build_sessions, sink.state_fingerprint)
-        except StateInFlightError as exc:
-            print(json.dumps({"error": str(exc), "retriable": True}), file=sys.stderr)
-            return 2
-        for row in rows:
-            print(json.dumps(row.asDict(), default=str))
-        return 0
+        return _serve_view(
+            BucketedSessionStatsSink,
+            args.session_root,
+            args.n_buckets,
+            "session index",
+            build_sessions,
+        )
 
     if args.cmd == "hourly-stats":
         from pyspark.sql import functions as F
@@ -691,19 +685,8 @@ def main(argv: list[str] | None = None) -> int:
         from cdc_platform_spark.streaming.hourly_index import (
             BucketedHourlyStatsSink,
         )
-        from cdc_platform_spark.streaming.pipeline import StateInFlightError
 
-        if not os.path.isdir(args.hourly_root):
-            print(
-                json.dumps({"error": f"no hourly index state at {args.hourly_root}"}),
-                file=sys.stderr,
-            )
-            return 1
-        sink = BucketedHourlyStatsSink(
-            args.hourly_root, n_buckets=args.n_buckets, read_only=True
-        )
-
-        def build_hourly():
+        def build_hourly(sink):
             df = sink.hourly_stats(spark)
             if args.gapfill:
                 # the read-time tail over the maintained aggregate —
@@ -715,14 +698,13 @@ def main(argv: list[str] | None = None) -> int:
                 df = df.filter(F.col("event_type") == args.event_type)
             return df.orderBy("event_type", "hour_s").limit(args.limit)
 
-        try:
-            rows = _collect_stable(build_hourly, sink.state_fingerprint)
-        except StateInFlightError as exc:
-            print(json.dumps({"error": str(exc), "retriable": True}), file=sys.stderr)
-            return 2
-        for row in rows:
-            print(json.dumps(row.asDict(), default=str))
-        return 0
+        return _serve_view(
+            BucketedHourlyStatsSink,
+            args.hourly_root,
+            args.n_buckets,
+            "hourly index",
+            build_hourly,
+        )
 
     if args.cmd == "serve":
         from cdc_platform_spark.streaming.dedup_index import CuratedCorpusSink

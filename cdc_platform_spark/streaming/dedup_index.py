@@ -56,11 +56,11 @@ from cdc_platform_spark.operators.dedup import (
 )
 from cdc_platform_spark.streaming.pipeline import (
     BucketedUpsertSink,
-    StateInFlightError,
     _BucketStore,
     _commit_swap,
     _recover_swapped_dir,
 )
+from cdc_platform_spark.streaming.views import MultiStoreView
 
 _PAIR_SCHEMA = "doc_a long, doc_b long, n_common long, jaccard double"
 
@@ -187,7 +187,7 @@ class _SigIndexSink(BucketedUpsertSink):
     )
 
 
-class BucketedMinHashIndexSink:
+class BucketedMinHashIndexSink(MultiStoreView):
     """The 100 TB form of :class:`MinHashIndexSink`: all three tables are
     hash-bucketed with per-bucket copy-on-write through the journaled
     atomic commit, and the per-batch candidate probe reads ONLY the band
@@ -225,98 +225,14 @@ class BucketedMinHashIndexSink:
     test and the ``sq_dedup_index_stream`` driver oracle.
     """
 
+    _INDEX = _SigIndexSink
+    _DEAD_ROW_STORES = ("pairs",)
+
     def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
-        self.path = path
-        self.index = _SigIndexSink(f"{path}/index", n_buckets, read_only=read_only)
-        self.bands = _BucketStore(f"{path}/bands", n_buckets, read_only=read_only)
-        self.pair_store = _BucketStore(f"{path}/pairs", n_buckets, read_only=read_only)
-        self.n_buckets = n_buckets
-        # read_only: serving-process mode — recovery never mutates (raises
-        # StateInFlightError on a mid-commit state instead), writes refuse,
-        # and the constructor creates nothing
-        self.read_only = read_only
-        if not read_only:
-            os.makedirs(path, exist_ok=True)
-
-    # --- cross-store batch markers -------------------------------------
-    # One batch commits SEVERAL stores in sequence (index, then bands,
-    # then pairs; the curated subclass adds the decon views).  Each store's
-    # own journal protocol makes its commit atomic, but nothing marks the
-    # WINDOW between two stores' commits — a concurrent read-only serve
-    # there would see e.g. a just-added near-duplicate in the index with
-    # its pair rows not yet committed: a state matching neither side of
-    # the batch, with no per-store evidence to refuse on.  A plain marker
-    # file at the sink root (store subdirs never see it) brackets the
-    # sequence: written before the first store commit, removed after the
-    # last — read-only recovery refuses (retriably) while it exists.
-    # Crash mid-batch leaves the marker, which is CORRECT: the state
-    # really is mid-batch until the checkpoint replays the batch (the
-    # writer's re-entered write() re-marks, completes, clears).
-    #
-    # Residual window: the gate runs when the read DataFrame is BUILT,
-    # but Spark reads the parquet lazily at action time — a writer batch
-    # that starts after the gate can still replace buckets mid-collect.
-    # Serving processes close it with state_fingerprint() + cli.py's
-    # _collect_stable (check-read-recheck, retry on change).
-
-    @property
-    def _stores_marker(self) -> str:
-        return f"{self.path}/_writer-inflight"
-
-    @staticmethod
-    def _set_marker(path: str) -> None:
-        with open(path, "w") as fh:
-            fh.write(uuid.uuid4().hex)
-
-    @staticmethod
-    def _clear_marker(path: str) -> None:
-        try:
-            os.remove(path)
-        except OSError:
-            pass
-
-    def _fingerprint_roots(self, scope: str = "all") -> list[str]:
-        return [self.index.path, self.bands.path, self.pair_store.path]
-
-    def _fingerprint_markers(self, scope: str = "all") -> list[str]:
-        return [self._stores_marker]
-
-    def state_fingerprint(self, scope: str = "all") -> tuple:
-        """Cheap filesystem fingerprint of the committed state, for the
-        check-read-recheck serving protocol (cli.py ``serve`` and the
-        lakehouse export; see
-        :func:`cdc_platform_spark.streaming.serving.fs_fingerprint` for
-        why equal brackets prove an un-torn read).
-
-        ``scope`` bounds the fingerprint to the stores a read actually
-        consults, so a serve does not retry — or exhaust, under
-        back-to-back maintenance — on state it never reads: ``"text"``
-        covers the index/bands/pairs stores and their batch marker (the
-        curated view and everything derived from it); ``"all"`` (the
-        safe default) additionally covers the curated subclass's
-        decontamination state.  Scopes must stay CONSERVATIVE: a batch
-        commits index→bands→pairs under one marker, so the narrowest
-        useful unit is the whole text-store family, never a single
-        store."""
-        from cdc_platform_spark.streaming.serving import fs_fingerprint
-
-        return fs_fingerprint(
-            self._fingerprint_roots(scope), self._fingerprint_markers(scope)
-        )
-
-    def _refuse_if_inflight(self, marker: str, what: str) -> None:
-        if self.read_only and os.path.exists(marker):
-            raise StateInFlightError(
-                f"{marker}: a writer batch is mid-commit across the {what} "
-                "stores (or crashed mid-batch and will replay) — retry "
-                "after it completes"
-            )
-
-    def _recover(self) -> None:
-        self.index._recover()
-        self.bands._recover()
-        self.pair_store._recover()
-        self._refuse_if_inflight(self._stores_marker, "index/bands/pairs")
+        super().__init__(path, n_buckets, read_only)
+        self.index = self._open("index", self._INDEX)
+        self.bands = self._open("bands")
+        self.pair_store = self._open("pairs")
 
     def _batch_rows(self, batch: DataFrame) -> DataFrame:
         """Latest row per doc within the batch + signatures — the exact
@@ -339,232 +255,178 @@ class BucketedMinHashIndexSink:
             ),
         )
 
-    def write(self, batch: DataFrame) -> bool:
-        """Returns True if the batch was applied, False for the empty-batch
-        no-op — so subclasses composing extra maintained views skip their
-        own work without re-running the emptiness probe."""
-        if not batch.take(1):
-            return False  # empty/replayed-out micro-batch: views unchanged
-        if self.read_only:
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "writes belong to the pipeline process"
-            )
-        self._recover()
+    def _apply(self, batch: DataFrame, keep) -> None:
         spark = batch.sparkSession
         nb = F.lit(self.n_buckets)
+        rows = keep(self._batch_rows(batch))
+        touched = rows.select("doc_id")  # distinct by construction
 
-        # bracket the multi-store commit sequence for concurrent read-only
-        # serves; deliberately NOT cleared on exception — a failed batch
-        # leaves the stores genuinely mid-batch until the replay
-        self._set_marker(self._stores_marker)
+        # 1. signature index: per-bucket copy-on-write keyed merge
+        self.index.write(rows)
 
-        rows = self._batch_rows(batch).persist()
-        persisted = [rows]
-        try:
-            touched = rows.select("doc_id")  # distinct by construction
+        # 2. the batch docs' POST-MERGE rows (an out-of-order batch may
+        # carry an older version than the index already holds; pairs
+        # must re-derive from what actually won the merge) — DPP-pruned
+        # to the touched docs' index buckets
+        tb = touched.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
+        batch_live = keep(
+            self.index.pruned_read(spark, tb)
+            .join(F.broadcast(touched), "doc_id", "leftsemi")
+            .filter((F.col("op") != "d") & (F.size("shingles") > 0))
+        )
 
-            # 1. signature index: per-bucket copy-on-write keyed merge
-            self.index.write(rows)
-
-            # 2. the batch docs' POST-MERGE rows (an out-of-order batch may
-            # carry an older version than the index already holds; pairs
-            # must re-derive from what actually won the merge) — DPP-pruned
-            # to the touched docs' index buckets
-            tb = touched.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
-            batch_live = (
-                self.index.pruned_read(spark, tb)
-                .join(F.broadcast(touched), "doc_id", "leftsemi")
-                .filter((F.col("op") != "d") & (F.size("shingles") > 0))
-                .persist()
+        # 3. bands: add the batch docs' current band rows;
+        # opportunistically drop touched docs' stale rows from the
+        # buckets this batch rewrites anyway
+        bb = keep(
+            batch_live.select("doc_id", F.posexplode("sig").alias("i", "h"))
+            .withColumn("bucket", F.pmod(F.hash("i", "h"), nb))
+        )
+        band_content = bb.select("doc_id", "i", "h", "bucket")
+        if self.bands.exists():
+            surviving_bands = (
+                self.bands.read_buckets(spark, bb)
+                .join(F.broadcast(touched), "doc_id", "leftanti")
+                .select("doc_id", "i", "h", "bucket")
             )
-            persisted.append(batch_live)
+            band_content = surviving_bands.unionByName(band_content)
+        # an empty band_content writes no bucket dirs and the commit
+        # no-ops, so no emptiness pre-check job is needed
+        self.bands.write_buckets(
+            band_content.repartition(self.n_buckets, "bucket")
+        )
 
-            # 3. bands: add the batch docs' current band rows;
-            # opportunistically drop touched docs' stale rows from the
-            # buckets this batch rewrites anyway
-            bb = (
-                batch_live.select("doc_id", F.posexplode("sig").alias("i", "h"))
-                .withColumn("bucket", F.pmod(F.hash("i", "h"), nb))
-                .persist()
+        # 4. candidate probe: batch band rows vs the band view pruned
+        # to THEIR buckets (the DPP partition filter the plan test
+        # asserts), currency-checked against the live index so stale
+        # band rows cannot create candidates the batch LSH would not
+        if self.bands.exists():
+            lb = self.bands.read_buckets(spark, bb).select(
+                F.col("doc_id").alias("other_id"), "i", "h", "bucket"
             )
-            persisted.append(bb)
-            band_content = bb.select("doc_id", "i", "h", "bucket")
-            if self.bands.exists():
-                surviving_bands = (
-                    self.bands.read_buckets(spark, bb)
-                    .join(F.broadcast(touched), "doc_id", "leftanti")
-                    .select("doc_id", "i", "h", "bucket")
+        else:  # first batch was all deletes: nothing to probe
+            lb = spark.createDataFrame([], "other_id long, i int, h long, bucket int")
+        cand0 = keep(
+            bb.join(lb, ["bucket", "i", "h"])
+            .filter(F.col("doc_id") != F.col("other_id"))
+            .withColumn("ob", F.pmod(F.hash("other_id"), nb))
+        )
+
+        # the partners' index rows, DPP-pruned to THEIR buckets — the
+        # currency check and the Jaccard verification never scan index
+        # buckets no candidate partner hashes into, so the whole batch
+        # touches only batch-adjacent state.  Computed ONCE with both
+        # columns and persisted: the frame is candidate-partner-sized
+        # and feeds two joins (currency check, verification), so a
+        # recompute would plan and run the pruned read twice per batch.
+        partner_rows = keep(
+            self.index.pruned_read(
+                spark, cand0.select(F.col("ob").alias("bucket"))
+            )
+            .filter((F.col("op") != "d") & (F.size("shingles") > 0))
+            .select(
+                F.col("doc_id").alias("other_id"),
+                F.col("bucket").alias("ob"),
+                F.col("sig").alias("osig"),
+                F.col("shingles").alias("osh"),
+            )
+        )
+
+        cand = (
+            cand0.join(partner_rows.select("other_id", "ob", "osig"), ["other_id", "ob"])
+            .filter(F.element_at("osig", (F.col("i") + 1).cast("int")) == F.col("h"))
+            .select("doc_id", "other_id")
+            .distinct()
+        )
+
+        # 5. exact Jaccard verification on candidates only
+        ver = (
+            cand.join(batch_live.select("doc_id", F.col("shingles").alias("sh")), "doc_id")
+            .withColumn("ob", F.pmod(F.hash("other_id"), nb))
+            .join(partner_rows.select("other_id", "ob", "osh"), ["other_id", "ob"])
+        )
+        ni = F.size(F.array_intersect(F.col("sh"), F.col("osh")))
+        jac = ni.cast("double") / (F.size("sh") + F.size("osh") - ni)
+        fresh = (
+            ver.withColumn("n_common", ni.cast("long"))
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
+            .select(F.col("doc_id").alias("k"), F.col("other_id").alias("o"), "n_common", "jaccard")
+        )
+        # both adjacency orientations; a batch-batch pair arises once
+        # per endpoint, so the mirror union double-counts it — distinct
+        # folds the copies (jaccard math is symmetric, values identical)
+        fresh_rows = (
+            fresh.unionByName(
+                fresh.select(
+                    F.col("o").alias("k"), F.col("k").alias("o"), "n_common", "jaccard"
                 )
-                band_content = surviving_bands.unionByName(band_content)
-            # an empty band_content writes no bucket dirs and the commit
-            # no-ops, so no emptiness pre-check job is needed
-            self.bands.write_buckets(
-                band_content.repartition(self.n_buckets, "bucket")
             )
+            .distinct()
+            .withColumn("bucket", F.pmod(F.hash("k"), nb))
+            .withColumn("dead", F.lit(False))
+        )
 
-            # 4. candidate probe: batch band rows vs the band view pruned
-            # to THEIR buckets (the DPP partition filter the plan test
-            # asserts), currency-checked against the live index so stale
-            # band rows cannot create candidates the batch LSH would not
-            if self.bands.exists():
-                lb = self.bands.read_buckets(spark, bb).select(
-                    F.col("doc_id").alias("other_id"), "i", "h", "bucket"
+        # 6. pair view: retract everything touching a batch doc, add
+        # the fresh rows — per-bucket copy-on-write over exactly
+        # hash(touched) ∪ hash(partners) ∪ hash(fresh)
+        pair_content = fresh_rows
+        if self.pair_store.exists():
+            t_rows = (
+                self.pair_store.read_buckets(spark, tb)
+                .filter(~F.col("dead"))
+                .join(
+                    F.broadcast(touched.withColumnRenamed("doc_id", "k")),
+                    "k",
+                    "leftsemi",
                 )
-            else:  # first batch was all deletes: nothing to probe
-                lb = spark.createDataFrame([], "other_id long, i int, h long, bucket int")
-            cand0 = (
-                bb.join(lb, ["bucket", "i", "h"])
-                .filter(F.col("doc_id") != F.col("other_id"))
-                .withColumn("ob", F.pmod(F.hash("other_id"), nb))
-                .persist()
             )
-            persisted.append(cand0)
-
-            # the partners' index rows, DPP-pruned to THEIR buckets — the
-            # currency check and the Jaccard verification never scan index
-            # buckets no candidate partner hashes into, so the whole batch
-            # touches only batch-adjacent state.  Computed ONCE with both
-            # columns and persisted: the frame is candidate-partner-sized
-            # and feeds two joins (currency check, verification), so a
-            # recompute would plan and run the pruned read twice per batch.
-            partner_rows = (
-                self.index.pruned_read(
-                    spark, cand0.select(F.col("ob").alias("bucket"))
-                )
-                .filter((F.col("op") != "d") & (F.size("shingles") > 0))
-                .select(
-                    F.col("doc_id").alias("other_id"),
-                    F.col("bucket").alias("ob"),
-                    F.col("sig").alias("osig"),
-                    F.col("shingles").alias("osh"),
-                )
-                .persist()
+            partner_buckets = t_rows.select(
+                F.pmod(F.hash("o"), nb).alias("bucket")
             )
-            persisted.append(partner_rows)
-
-            cand = (
-                cand0.join(partner_rows.select("other_id", "ob", "osig"), ["other_id", "ob"])
-                .filter(F.element_at("osig", (F.col("i") + 1).cast("int")) == F.col("h"))
-                .select("doc_id", "other_id")
+            all_buckets = (
+                tb.unionByName(partner_buckets)
+                .unionByName(fresh_rows.select("bucket"))
                 .distinct()
             )
+            tk = F.broadcast(
+                touched.select(F.col("doc_id").alias("k"), F.lit(True).alias("_tk"))
+            )
+            to = F.broadcast(
+                touched.select(F.col("doc_id").alias("o"), F.lit(True).alias("_to"))
+            )
+            existing = (
+                self.pair_store.read_buckets(spark, all_buckets)
+                .filter(~F.col("dead"))
+                .join(tk, "k", "left")
+                .join(to, "o", "left")
+                # retracted rows stay as dead markers so a bucket
+                # emptied by retraction still commits its rewrite
+                .withColumn("dead", F.col("_tk").isNotNull() | F.col("_to").isNotNull())
+                .select("k", "o", "n_common", "jaccard", "dead", "bucket")
+            )
+            pair_content = existing.unionByName(fresh_rows)
+        self.pair_store.write_buckets(
+            pair_content.repartition(self.n_buckets, "bucket")
+        )
 
-            # 5. exact Jaccard verification on candidates only
-            ver = (
-                cand.join(batch_live.select("doc_id", F.col("shingles").alias("sh")), "doc_id")
-                .withColumn("ob", F.pmod(F.hash("other_id"), nb))
-                .join(partner_rows.select("other_id", "ob", "osh"), ["other_id", "ob"])
-            )
-            ni = F.size(F.array_intersect(F.col("sh"), F.col("osh")))
-            jac = ni.cast("double") / (F.size("sh") + F.size("osh") - ni)
-            fresh = (
-                ver.withColumn("n_common", ni.cast("long"))
-                .withColumn("jaccard", jac)
-                .filter(F.col("jaccard") >= MINHASH_JACCARD_THRESHOLD)
-                .select(F.col("doc_id").alias("k"), F.col("other_id").alias("o"), "n_common", "jaccard")
-            )
-            # both adjacency orientations; a batch-batch pair arises once
-            # per endpoint, so the mirror union double-counts it — distinct
-            # folds the copies (jaccard math is symmetric, values identical)
-            fresh_rows = (
-                fresh.unionByName(
-                    fresh.select(
-                        F.col("o").alias("k"), F.col("k").alias("o"), "n_common", "jaccard"
-                    )
-                )
-                .distinct()
-                .withColumn("bucket", F.pmod(F.hash("k"), nb))
-                .withColumn("dead", F.lit(False))
-            )
-
-            # 6. pair view: retract everything touching a batch doc, add
-            # the fresh rows — per-bucket copy-on-write over exactly
-            # hash(touched) ∪ hash(partners) ∪ hash(fresh)
-            pair_content = fresh_rows
-            if self.pair_store.exists():
-                t_rows = (
-                    self.pair_store.read_buckets(spark, tb)
-                    .filter(~F.col("dead"))
-                    .join(
-                        F.broadcast(touched.withColumnRenamed("doc_id", "k")),
-                        "k",
-                        "leftsemi",
-                    )
-                )
-                partner_buckets = t_rows.select(
-                    F.pmod(F.hash("o"), nb).alias("bucket")
-                )
-                all_buckets = (
-                    tb.unionByName(partner_buckets)
-                    .unionByName(fresh_rows.select("bucket"))
-                    .distinct()
-                )
-                tk = F.broadcast(
-                    touched.select(F.col("doc_id").alias("k"), F.lit(True).alias("_tk"))
-                )
-                to = F.broadcast(
-                    touched.select(F.col("doc_id").alias("o"), F.lit(True).alias("_to"))
-                )
-                existing = (
-                    self.pair_store.read_buckets(spark, all_buckets)
-                    .filter(~F.col("dead"))
-                    .join(tk, "k", "left")
-                    .join(to, "o", "left")
-                    # retracted rows stay as dead markers so a bucket
-                    # emptied by retraction still commits its rewrite
-                    .withColumn("dead", F.col("_tk").isNotNull() | F.col("_to").isNotNull())
-                    .select("k", "o", "n_common", "jaccard", "dead", "bucket")
-                )
-                pair_content = existing.unionByName(fresh_rows)
-            self.pair_store.write_buckets(
-                pair_content.repartition(self.n_buckets, "bucket")
-            )
-        finally:
-            for df in persisted:
-                df.unpersist()
-        self._clear_marker(self._stores_marker)
-        return True
-
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Maintenance pass (the L3-compaction analogue for this view):
-        rewrite the band buckets keeping only CURRENT rows — each (doc, i,
-        h) must match the live index's signature — and drop the pair
-        stores' dead markers.  Correctness never requires this (the probe
-        currency-check already ignores stale rows); it reclaims the dead
-        weight the opportunistic per-batch cleaning leaves in
-        rarely-rewritten buckets.  With ``tombstone_horizon``, index
-        delete tombstones older than the replay watermark are GC'd too
-        (see BucketedUpsertSink.compact for the resurrection-safety
-        contract).  O(index) — schedule like compaction, not per batch."""
-        self._recover()
-        if tombstone_horizon is not None:
-            self.index.compact(spark, tombstone_horizon)
-        nb = F.lit(self.n_buckets)
+    def _compact_derived(self, spark: SparkSession) -> None:
+        """Rewrite the band buckets keeping only CURRENT rows — each (doc,
+        i, h) must match the live index's signature — then drop the pair
+        store's dead markers.  The probe currency check already ignores
+        stale band rows; this reclaims the dead weight the opportunistic
+        per-batch cleaning leaves in rarely-rewritten buckets."""
         if self.bands.exists():
             live = self.index.raw_state(spark).filter(
                 (F.col("op") != "d") & (F.size("shingles") > 0)
             )
             current = (
                 live.select("doc_id", F.posexplode("sig").alias("i", "h"))
-                .withColumn("bucket", F.pmod(F.hash("i", "h"), nb))
+                .withColumn("bucket", F.pmod(F.hash("i", "h"), F.lit(self.n_buckets)))
                 .select("doc_id", "i", "h", "bucket")
             )
             self.bands.rewrite_all(current.repartition(self.n_buckets, "bucket"))
-        if self.pair_store.exists():
-            kept = spark.read.parquet(self.pair_store.path).filter(~F.col("dead"))
-            self.pair_store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
-
-    def state_stats(self, spark: SparkSession) -> dict:
-        """Per-store maintenance metrics for the coordinated views — what
-        the compaction scheduler (and ``cdc-spark maintain``) consults:
-        index tombstones, band-store stale weight, pair-store dead
-        markers.  Each part reuses the shared bounded-stats read."""
-        return {
-            "index": self.index.state_stats(spark),
-            "bands": self.bands.state_stats(spark),
-            "pairs": self.pair_store.state_stats(spark),
-        }
+        super()._compact_derived(spark)
 
     def pairs(self, spark: SparkSession) -> DataFrame:
         """The live near-dup pair view (canonical doc_a < doc_b rows)."""
@@ -645,11 +507,10 @@ class CuratedCorpusSink(BucketedMinHashIndexSink):
     metrics are cheap JVM expressions over the stored text, suppression
     is one broadcast anti join against the pair view."""
 
+    _INDEX = _CuratedSigIndexSink
+
     def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
         super().__init__(path, n_buckets, read_only=read_only)
-        self.index = _CuratedSigIndexSink(
-            f"{path}/index", n_buckets, read_only=read_only
-        )
         # decontamination as MAINTAINED state (not a per-read derive):
         # - bench_grams/: latest (doc_id, offset, op, decon_grams) per
         #   BENCHMARK document — a keyed-upsert mirror of the index's
@@ -688,18 +549,25 @@ class CuratedCorpusSink(BucketedMinHashIndexSink):
     def _decon_marker(self) -> str:
         return f"{self.path}/_decon-inflight"
 
-    def _fingerprint_roots(self, scope: str = "all") -> list[str]:
-        # "text": curated and its derivatives never read the bench mirror
-        # or the hit store, so decon maintenance (which commits under its
-        # own marker AFTER the stores marker clears) must not retry them
-        if scope == "text":
-            return super()._fingerprint_roots(scope)
-        return super()._fingerprint_roots(scope) + [self.bench_path, self.hit_store.path]
+    def state_fingerprint(self, scope: str = "all") -> tuple:
+        """The base fingerprint, scoped to the stores a read actually
+        consults so a serve does not retry — or exhaust, under
+        back-to-back maintenance — on state it never reads: ``"text"``
+        covers the index/bands/pairs stores and their batch marker (the
+        curated view and everything derived from it); ``"all"`` (the safe
+        default) additionally covers the decontamination state — bench
+        mirror, hit store and decon marker, which decon maintenance
+        commits AFTER the stores marker clears.  Scopes stay
+        CONSERVATIVE: a batch commits index→bands→pairs under one marker,
+        so the narrowest useful unit is the whole text-store family."""
+        from cdc_platform_spark.streaming.serving import fs_fingerprint
 
-    def _fingerprint_markers(self, scope: str = "all") -> list[str]:
         if scope == "text":
-            return super()._fingerprint_markers(scope)
-        return super()._fingerprint_markers(scope) + [self._decon_marker]
+            return super().state_fingerprint()
+        return fs_fingerprint(
+            [*(store.path for store in self.stores.values()), self.bench_path, self.hit_store.path],
+            [self._stores_marker, self._decon_marker],
+        )
 
     def _recover(self) -> None:
         super()._recover()
@@ -770,9 +638,6 @@ class CuratedCorpusSink(BucketedMinHashIndexSink):
         spark = batch.sparkSession
         nb = F.lit(self.n_buckets)
         is_bench = F.col("doc_id") % DECON_BENCH_MOD == 0
-        touched = (
-            batch.filter(F.col("op").isNotNull()).select("doc_id").distinct().persist()
-        )
 
         def triples(live_rows: DataFrame, bench_path: str | None = None) -> DataFrame:
             return (
@@ -783,7 +648,8 @@ class CuratedCorpusSink(BucketedMinHashIndexSink):
                 .withColumn("dead", F.lit(False))
             )
 
-        try:
+        with self.persisting() as keep:
+            touched = keep(batch.filter(F.col("op").isNotNull()).select("doc_id").distinct())
             bench_touched = touched.filter(is_bench)
             # full-rebuild branch also fires when the state predates the
             # maintained views (pre-mirror dirs): the first write under
@@ -867,14 +733,10 @@ class CuratedCorpusSink(BucketedMinHashIndexSink):
                 )
                 content = existing.unionByName(fresh)
             self.hit_store.write_buckets(content.repartition(self.n_buckets, "bucket"))
-        finally:
-            touched.unpersist()
 
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        super().compact(spark, tombstone_horizon)
-        if self.hit_store.exists():
-            kept = spark.read.parquet(self.hit_store.path).filter(~F.col("dead"))
-            self.hit_store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
+    def _compact_derived(self, spark: SparkSession) -> None:
+        super()._compact_derived(spark)
+        self._drop_dead_rows(spark, self.hit_store)
 
     def _batch_rows(self, batch: DataFrame) -> DataFrame:
         from cdc_platform_spark.operators.text import (

@@ -7,11 +7,10 @@ hourly series by ADDITIVE partial-aggregate merge (BucketedAggregatingSink):
 exactly right for append-only streams, but an update or delete wave cannot
 retract from the sums.  Real CDC carries both: an update can MOVE an event
 across hours (time shift) or across event types (reclassification), and a
-delete must remove its contribution.  This sink applies the
-recompute-the-touched-group pattern of ``BucketedSessionStatsSink``
-(streaming/session_index.py) to the (event_type, hour) group key —
-count/sum per touched hour are cheap to recompute exactly, so the sink
-never delta-updates an aggregate and double application is impossible.
+delete must remove its contribution.  This sink is a
+:class:`~cdc_platform_spark.streaming.views.GroupedRecomputeView` over the
+(event_type, hour) group key — count/sum per touched hour are cheap to
+recompute exactly, so no aggregate is ever delta-updated.
 
 Semantics maintained (must equal the from-scratch batch computation over
 the live post-CDC events — asserted by the ``sq_gapfill_locf_cdc_stream``
@@ -23,78 +22,33 @@ driver oracle and the equivalence tests):
     hour_s = floor(t_us / 3600e6) * 3600 — the batch w_gapfill_locf /
     sq_gapfill_locf_stream hour bucket (epoch seconds).
 
-Storage layout — three per-bucket copy-on-write stores (the journaled
-atomic-commit machinery of streaming/pipeline.py):
+Storage layout — the group key is ``(event_type, hour_bucket(t_us))``:
 
 - **index/** — per-event latest (event_id, offset, op, event_type, t_us,
-  value) keyed-merged by ``hash(event_id)`` (tombstones retained): the
-  authoritative record of each event's CURRENT version, and the store
-  that answers "which (event_type, hour) did this event contribute to
-  BEFORE the batch" — an update can move an event between groups, and
-  BOTH groups' aggregates must be recomputed.
-- **group_events/** — the same live events re-clustered by
-  ``hash(event_type, hour_s)``: the per-group event log a recompute
-  reads, DPP-pruned to the touched groups' buckets.  EXACT (dead markers
-  for retracted rows, dropped on the bucket's next rewrite).
+  value) keyed by ``hash(event_id)``: the record of each event's group
+  BEFORE the batch.
+- **group_events/** — the live events re-clustered by
+  ``hash(event_type, hour_s)``: the per-group event log a recompute reads.
 - **hourly/** — the serve view: one (event_type, hour_s, n_events,
-  value_sum) row per live group, bucketed the same way, so a serving
-  read scans four narrow columns and touches no events.  The dense-grid
+  value_sum) row per live group, bucketed the same way.  The dense-grid
   + LOCF projection stays a READ-TIME tail over this store
   (``gapfill_locf_grid``), bounded by grid size.
 
-The affected set per batch is the TOUCHED GROUPS (old groups ∪ new groups
-of the batch's events) — hourly aggregates have no cross-group coupling,
-so the recompute is group-local: a plain count/sum over the touched
-groups' live events, one partial-aggregated shuffle of a batch-adjacent
-frame.  Every scan is DPP-pruned to the touched events' / groups'
-buckets: batch cost is batch-adjacent, never corpus-proportional.  No
-broadcast hints anywhere (verdict r12/r13): the touched sets are
-micro-batch-proportional and AQE broadcasts them at runtime when small.
-
-Exactness under replay — the commit-ORDER argument (same as
-streaming/session_index.py): stores commit **group_events → hourly →
-index**, the per-event index LAST.  Every derived quantity is a function
-of (batch rows, pre-merge index, non-touched rows of the affected
-buckets) — all untouched until the final commit, so a crash after ANY
-prefix of the sequence replays to the identical computation; the
-group_events rewrite is idempotent, and hourly aggregates are RECOMPUTED
-from exact state for every touched group (never delta-updated).
-
-A cross-store marker file brackets the commits (write AND compact) for
-concurrent read-only serves, exactly like BucketedSpanIndexSink; serving
-processes additionally bracket collects with ``state_fingerprint`` +
-check-read-recheck.
+The recompute is a plain count/sum over the touched groups' live events,
+one partial-aggregated shuffle of a batch-adjacent frame.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_platform_spark.streaming.pipeline import (
-    BucketedUpsertSink,
-    StateInFlightError,
-    _BucketStore,
-)
-from cdc_platform_spark.streaming.span_index import _clear_marker, _set_marker
+from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+from cdc_platform_spark.streaming.views import GroupedRecomputeView
 
 #: microseconds per hour — the w_gapfill_locf bucket width
 HOUR_US = 3_600_000_000
 
-_EVENT_SCHEMA = (
-    "event_id long, offset long, op string, event_type string, t_us long, "
-    "value decimal(18,2)"
-)
-_GROUP_EVENTS_SCHEMA = (
-    "event_type string, hour_s long, event_id long, value decimal(18,2), "
-    "dead boolean"
-)
-_HOURLY_SCHEMA = (
-    "event_type string, hour_s long, n_events long, value_sum decimal(28,2), "
-    "dead boolean"
-)
 _SERVE_SCHEMA = "event_type string, hour_s long, n long, v double"
 
 _GROUP = ["event_type", "hour_s"]
@@ -125,265 +79,50 @@ class _HourlyEventIndexSink(BucketedUpsertSink):
 
     _COLS = ["event_id", "offset", "op", "event_type", "t_us", "value"]
     _KEY = "event_id"
-    _STATE_SCHEMA = _EVENT_SCHEMA
+    _STATE_SCHEMA = (
+        "event_id long, offset long, op string, event_type string, t_us long, "
+        "value decimal(18,2)"
+    )
 
 
-class BucketedHourlyStatsSink:
+class BucketedHourlyStatsSink(GroupedRecomputeView):
     """Maintains exact per-(event_type, hour) aggregates under event CDC.
 
-    See the module docstring for the store layout and the commit-order
-    replay argument.  API mirrors BucketedSessionStatsSink: ``write`` per
-    micro-batch (foreachBatch), ``hourly_stats`` as the serve view,
-    ``hourly_from_scratch`` as the flat full-recompute form (the
-    equivalence anchor), ``compact`` as the scheduled maintenance pass,
-    ``state_fingerprint`` for the check-read-recheck serving protocol.
+    ``write`` per micro-batch (foreachBatch), ``hourly_stats`` as the
+    serve view, ``hourly_from_scratch`` as the flat full-recompute form
+    (the equivalence anchor), ``compact`` as the scheduled maintenance
+    pass, ``state_fingerprint`` for the check-read-recheck serving
+    protocol.
     """
 
-    def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
-        self.path = path
-        self.n_buckets = n_buckets
-        self.index = _HourlyEventIndexSink(
-            f"{path}/index", n_buckets=n_buckets, read_only=read_only
-        )
-        self.group_events = _BucketStore(
-            f"{path}/group_events", n_buckets=n_buckets, read_only=read_only
-        )
-        self.group_events._STATE_SCHEMA = _GROUP_EVENTS_SCHEMA
-        self.hourly = _BucketStore(
-            f"{path}/hourly", n_buckets=n_buckets, read_only=read_only
-        )
-        self.hourly._STATE_SCHEMA = _HOURLY_SCHEMA
-        self.read_only = read_only
-        if not read_only:
-            os.makedirs(path, exist_ok=True)
+    _INDEX = _HourlyEventIndexSink
+    _KEY = tuple(_GROUP)
+    _LOG = "group_events"
+    _LOG_SCHEMA = (
+        "event_type string, hour_s long, event_id long, value decimal(18,2), "
+        "dead boolean"
+    )
+    _VIEW = "hourly"
+    _VIEW_SCHEMA = (
+        "event_type string, hour_s long, n_events long, value_sum decimal(28,2), "
+        "dead boolean"
+    )
+    _recompute = staticmethod(hourly_aggregate)
 
-    # --- cross-store batch marker (same protocol as the session sink) ----
-    @property
-    def _stores_marker(self) -> str:
-        return f"{self.path}/_writer-inflight"
-
-    def state_fingerprint(self) -> tuple:
-        from cdc_platform_spark.streaming.serving import fs_fingerprint
-
-        return fs_fingerprint(
-            [self.index.path, self.group_events.path, self.hourly.path],
-            [self._stores_marker],
+    def _log_rows(self, live: DataFrame) -> DataFrame:
+        return live.select(
+            "event_type", hour_bucket(F.col("t_us")).alias("hour_s"), "event_id", "value"
         )
 
-    def _recover(self) -> None:
-        self.index._recover()
-        self.group_events._recover()
-        self.hourly._recover()
-        if self.read_only and os.path.exists(self._stores_marker):
-            raise StateInFlightError(
-                f"{self._stores_marker}: a writer batch is mid-commit across "
-                "the hourly index/group_events/hourly stores (or crashed "
-                "mid-batch and will replay) — retry after it completes"
-            )
-
-    # --- per-batch maintenance ------------------------------------------
-    def _batch_rows(self, batch: DataFrame) -> DataFrame:
-        """Latest row per event within the batch (out-of-order and
-        duplicate deliveries collapse here), value pinned to the exact
-        DECIMAL the batch oracle sums."""
-        latest = (
-            batch.filter(F.col("op").isNotNull())
-            .groupBy("event_id")
-            .agg(
-                F.max_by(
-                    F.struct("offset", "op", "event_type", "t_us", "value"),
-                    F.col("offset"),
-                ).alias("m")
-            )
-            .select("event_id", "m.*")
-        )
-        return latest.select(
-            "event_id",
-            "offset",
-            "op",
+    @staticmethod
+    def _serve(df: DataFrame) -> DataFrame:
+        return df.select(
             "event_type",
-            "t_us",
-            F.col("value").cast("decimal(18,2)").alias("value"),
+            "hour_s",
+            F.col("n_events").alias("n"),
+            F.col("value_sum").cast("double").alias("v"),
         )
 
-    def _empty(self, spark: SparkSession, schema: str) -> DataFrame:
-        return spark.createDataFrame([], f"{schema}, bucket int")
-
-    def _group_bucket(self):
-        return F.pmod(F.hash(*_GROUP), F.lit(self.n_buckets))
-
-    def write(self, batch: DataFrame) -> bool:
-        """Apply one CDC micro-batch; returns False for the empty no-op."""
-        if not batch.take(1):
-            return False
-        if self.read_only:
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "writes belong to the pipeline process"
-            )
-        self._recover()
-        spark = batch.sparkSession
-        nb = F.lit(self.n_buckets)
-
-        # deliberately NOT cleared on exception — a failed batch leaves
-        # the stores genuinely mid-batch until the checkpoint replays it
-        _set_marker(self._stores_marker)
-
-        rows = self._batch_rows(batch).persist()
-        persisted = [rows]
-        try:
-            touched = rows.select("event_id")  # distinct by construction
-            tb = touched.select(F.pmod(F.hash("event_id"), nb).alias("bucket"))
-
-            # pre-merge index rows of the touched events (the
-            # authoritative OLD versions, including the old GROUP) — read
-            # BEFORE the index commits, which is what makes every
-            # quantity below replay-stable
-            old_full = (
-                self.index.pruned_read(spark, tb)
-                .join(touched, "event_id", "leftsemi")
-                .select("event_id", "offset", "op", "event_type", "t_us", "value")
-                if self.index.exists()
-                else spark.createDataFrame([], _EVENT_SCHEMA)
-            )
-
-            # what WILL win the index merge (an out-of-order batch may
-            # carry an older version than the index already holds)
-            winner = (
-                rows.select("event_id", "offset", "op", "event_type", "t_us", "value")
-                .unionByName(old_full)
-                .groupBy("event_id")
-                .agg(
-                    F.max_by(
-                        F.struct("offset", "op", "event_type", "t_us", "value"),
-                        F.col("offset"),
-                    ).alias("m")
-                )
-                .select("event_id", "m.op", "m.event_type", "m.t_us", "m.value")
-            )
-            new_live = (
-                winner.filter(
-                    (F.col("op") != "d")
-                    & F.col("event_type").isNotNull()
-                    & F.col("t_us").isNotNull()
-                )
-                .select(
-                    "event_id",
-                    "event_type",
-                    hour_bucket(F.col("t_us")).alias("hour_s"),
-                    "value",
-                )
-                .persist()
-            )
-            persisted.append(new_live)
-
-            # touched groups: OLD groups (a live pre-version anywhere) ∪
-            # NEW groups — an update moving an event across hours or
-            # event types must recompute BOTH groups' aggregates
-            touched_groups = (
-                old_full.filter(
-                    (F.col("op") != "d")
-                    & F.col("event_type").isNotNull()
-                    & F.col("t_us").isNotNull()
-                )
-                .select("event_type", hour_bucket(F.col("t_us")).alias("hour_s"))
-                .unionByName(new_live.select(*_GROUP))
-                .distinct()
-                .persist()
-            )
-            persisted.append(touched_groups)
-            gb = touched_groups.select(self._group_bucket().alias("bucket"))
-
-            # 1. group_events rewrite over the touched groups' buckets:
-            # keep the untouched events, drop the touched ones (dead
-            # markers keep emptied buckets committing), add the winners'
-            # live rows
-            before_live = (
-                self.group_events.read_buckets(spark, gb).filter(~F.col("dead"))
-                if self.group_events.exists()
-                else self._empty(spark, _GROUP_EVENTS_SCHEMA)
-            )
-            kept = before_live.join(touched, "event_id", "leftanti")
-            dead_rows = (
-                before_live.join(touched, "event_id", "leftsemi")
-                .select("event_type", "hour_s", "event_id", "value", "bucket")
-                .withColumn("dead", F.lit(True))
-            )
-            fresh = (
-                new_live.select("event_type", "hour_s", "event_id", "value")
-                .withColumn("bucket", self._group_bucket())
-                .withColumn("dead", F.lit(False))
-            )
-            ge_cols = ["event_type", "hour_s", "event_id", "value", "bucket", "dead"]
-            ge_content = (
-                kept.select(*ge_cols)
-                .unionByName(fresh.select(*ge_cols))
-                .unionByName(dead_rows.select(*ge_cols))
-            )
-            self.group_events.write_buckets(
-                ge_content.repartition(self.n_buckets, "bucket")
-            )
-
-            # 2. RECOMPUTE (never delta) each touched group's aggregate
-            # from the post-rewrite exact event log, DPP-pruned to the
-            # touched groups' buckets.  exists() re-checked: a delete-only
-            # first batch may have committed no bucket at all.
-            ge_after = (
-                self.group_events.read_buckets(spark, gb).filter(~F.col("dead"))
-                if self.group_events.exists()
-                else self._empty(spark, _GROUP_EVENTS_SCHEMA)
-            )
-            recomputed = hourly_aggregate(
-                ge_after.join(touched_groups, _GROUP, "leftsemi").select(
-                    "event_type", "hour_s", "event_id", "value"
-                )
-            ).persist()
-            persisted.append(recomputed)
-
-            # 3. hourly rewrite over the touched groups' buckets: keep
-            # the other groups' rows, replace the touched groups' (dead
-            # markers for groups that left the view entirely)
-            existing = (
-                self.hourly.read_buckets(spark, gb)
-                .filter(~F.col("dead"))
-                .join(touched_groups, _GROUP, "leftanti")
-                .select("event_type", "hour_s", "n_events", "value_sum", "bucket")
-                .withColumn("dead", F.lit(False))
-                if self.hourly.exists()
-                else self._empty(spark, _HOURLY_SCHEMA)
-            )
-            gone = (
-                touched_groups.join(recomputed.select(*_GROUP), _GROUP, "leftanti")
-                .select(
-                    "event_type",
-                    "hour_s",
-                    F.lit(0).cast("long").alias("n_events"),
-                    F.lit(None).cast("decimal(28,2)").alias("value_sum"),
-                )
-                .withColumn("dead", F.lit(True))
-            )
-            h_cols = ["event_type", "hour_s", "n_events", "value_sum", "dead", "bucket"]
-            h_content = (
-                recomputed.withColumn(
-                    "value_sum", F.col("value_sum").cast("decimal(28,2)")
-                )
-                .withColumn("dead", F.lit(False))
-                .unionByName(gone)
-                .withColumn("bucket", self._group_bucket())
-                .select(*h_cols)
-                .unionByName(existing.select(*h_cols))
-            )
-            self.hourly.write_buckets(h_content.repartition(self.n_buckets, "bucket"))
-
-            # 4. the per-event index commits LAST — the replay anchor
-            self.index.write(rows)
-        finally:
-            for df_ in persisted:
-                df_.unpersist()
-        _clear_marker(self._stores_marker)
-        return True
-
-    # --- serve + maintenance --------------------------------------------
     def hourly_stats(self, spark: SparkSession) -> DataFrame:
         """The serve view: exact aggregates per live (event_type, hour) —
         four narrow maintained columns; no events touched.  v is DOUBLE,
@@ -392,64 +131,9 @@ class BucketedHourlyStatsSink:
         self._recover()
         if not self.hourly.exists():
             return spark.createDataFrame([], _SERVE_SCHEMA)
-        return (
-            spark.read.parquet(self.hourly.path)
-            .filter(~F.col("dead"))
-            .select(
-                "event_type",
-                "hour_s",
-                F.col("n_events").alias("n"),
-                F.col("value_sum").cast("double").alias("v"),
-            )
-        )
+        return self._serve(spark.read.parquet(self.hourly.path).filter(~F.col("dead")))
 
     def hourly_from_scratch(self, spark: SparkSession) -> DataFrame:
-        """The FLAT form: full recompute from the authoritative per-event
-        index (O(state)).  The bucketed serve view must equal this after
-        every batch — the flat-vs-bucketed equivalence anchor."""
-        self._recover()
-        live = (
-            self.index.state(spark)
-            .filter(F.col("event_type").isNotNull() & F.col("t_us").isNotNull())
-            .select(
-                "event_type", hour_bucket(F.col("t_us")).alias("hour_s"), "value"
-            )
-        )
-        return hourly_aggregate(live).select(
-            "event_type",
-            "hour_s",
-            F.col("n_events").alias("n"),
-            F.col("value_sum").cast("double").alias("v"),
-        )
-
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Scheduled maintenance: drop the dead markers retraction leaves
-        in the group_events/hourly buckets (correctness never needs this
-        — every read filters them; it reclaims storage), and optionally
-        GC index tombstones below the replay watermark.  Bracketed with
-        the cross-store marker like :meth:`write`; idempotent, so the
-        maintenance scheduler's retry clears a crashed attempt."""
-        if self.read_only:
-            # refuse BEFORE touching the marker (ADVICE r13): a read_only
-            # compact must not strand a cross-store marker that blocks
-            # every serve until the writer's next write clears it
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "compaction belongs to the maintenance process"
-            )
-        self._recover()
-        _set_marker(self._stores_marker)
-        if tombstone_horizon is not None:
-            self.index.compact(spark, tombstone_horizon)
-        for store in (self.group_events, self.hourly):
-            if store.exists():
-                kept = spark.read.parquet(store.path).filter(~F.col("dead"))
-                store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
-        _clear_marker(self._stores_marker)
-
-    def state_stats(self, spark: SparkSession) -> dict:
-        return {
-            "index": self.index.state_stats(spark),
-            "group_events": self.group_events.state_stats(spark),
-            "hourly": self.hourly.state_stats(spark),
-        }
+        """The flat full recompute from the per-event index — the serve
+        view must equal it after every batch."""
+        return self._serve(self._from_scratch(spark))

@@ -48,18 +48,13 @@ from pyspark.sql import functions as F
 
 from cdc_platform_spark.streaming.pipeline import (
     BucketedUpsertSink,
-    _BucketStore,
     _commit_swap,
     _recover_swapped_dir,
-    pruned_bucket_read,
 )
+from cdc_platform_spark.streaming.views import MultiStoreView
 
 _VIEW_COLS = ["seq", "pk", "event_type", "fact_value", "dim_value"]
 _VIEW_SCHEMA = "seq long, pk long, event_type string, fact_value double, dim_value double"
-
-
-def _has_buckets(path: str) -> bool:
-    return os.path.isdir(path) and any(n.startswith("bucket=") for n in os.listdir(path))
 
 
 class EnrichedJoinViewSink:
@@ -184,7 +179,7 @@ class _DimSink(BucketedUpsertSink):
     _STATE_SCHEMA = "pk long, offset long, op string, value double"
 
 
-class BucketedJoinViewSink:
+class BucketedJoinViewSink(MultiStoreView):
     """The 100 TB form of :class:`EnrichedJoinViewSink`: facts/, dim/ and
     view/ are all hash-bucketed by ``pk`` with per-bucket copy-on-write —
     a micro-batch reads and rewrites ONLY the buckets its keys hash into,
@@ -197,96 +192,66 @@ class BucketedJoinViewSink:
       1. facts' and dim' merge through ``BucketedUpsertSink`` (DPP-pruned
          state scan, one bucket-keyed exchange each),
       2. the re-derive reads facts' and dim' restricted to the TOUCHED
-         pk buckets (broadcast-semi DPP prune) then semi-joined to the
-         touched keys,
+         pk buckets (DPP prune) then semi-joined to the touched keys,
       3. the view rewrite touches only the touched pk buckets: surviving
          rows keep their bucket, retracted rows are written back with
-         ``dead=true`` so a bucket whose every row was retracted still
-         commits (partitioned parquet cannot emit an empty dir); dead
-         rows are filtered from the view and dropped on the bucket's
-         next rewrite.
+         ``dead=true``.
 
-    Crash between the three commits heals exactly as the flat sink: the
-    replayed batch re-runs idempotent keyed merges and a deterministic
-    view re-derive."""
+    The three commits follow the
+    :class:`~cdc_platform_spark.streaming.views.MultiStoreView` protocol
+    (keyed merges first, the view re-derived from their post-merge
+    state).  ``compact`` GCs the DIM store's tombstones only: the FACTS
+    store's op='d' rows are real event records — delete events are facts
+    that join the live dim in the view — not key-deletion tombstones."""
 
-    def __init__(self, path: str, n_buckets: int = 16) -> None:
-        self.facts = _FactsSink(f"{path}/facts", n_buckets)
-        self.dim = _DimSink(f"{path}/dim", n_buckets)
-        self.view_store = _BucketStore(f"{path}/view", n_buckets)
-        self.n_buckets = n_buckets
-        os.makedirs(path, exist_ok=True)
+    _TOMBSTONE_STORE = "dim"
+    _DEAD_ROW_STORES = ("view",)
 
-    def _recover(self) -> None:
-        self.facts._recover()
-        self.dim._recover()
-        self.view_store._recover()
+    def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
+        super().__init__(path, n_buckets, read_only)
+        self.facts = self._open("facts", _FactsSink)
+        self.dim = self._open("dim", _DimSink)
+        self.view_store = self._open("view", schema=f"{_VIEW_SCHEMA}, dead boolean")
 
-    def write(self, batch: DataFrame) -> None:
-        if batch.isEmpty():
-            return  # empty/poisoned micro-batch: all three tables unchanged
-        self._recover()
+    def _apply(self, batch: DataFrame, keep) -> None:
         spark = batch.sparkSession
         nb = F.lit(self.n_buckets)
-        rows = batch.select("seq", "offset", "pk", "op", "event_type", "value").persist()
-        try:
-            # 1-2. keyed merges, per-bucket copy-on-write
-            self.facts.write(rows)
-            self.dim.write(rows)
+        rows = keep(batch.select("seq", "offset", "pk", "op", "event_type", "value"))
+        # 1-2. keyed merges, per-bucket copy-on-write
+        self.facts.write(rows)
+        self.dim.write(rows)
 
-            # 3-4. view: retract + re-derive for the batch's keys only,
-            # reading facts'/dim' pruned to the touched pk buckets
-            touched = rows.select("pk").distinct()
-            tb = touched.select(F.pmod(F.hash("pk"), nb).alias("bucket"))
-            fresh = spark.createDataFrame([], _VIEW_SCHEMA)
-            if _has_buckets(self.facts.path) and _has_buckets(self.dim.path):
-                f_state = pruned_bucket_read(spark, self.facts.path, tb).join(
-                    F.broadcast(touched), "pk", "leftsemi"
-                )
-                d_live = (
-                    pruned_bucket_read(spark, self.dim.path, tb)
-                    .join(F.broadcast(touched), "pk", "leftsemi")
-                    .filter(F.col("op") != "d")
-                    .select("pk", F.col("value").alias("dim_value"))
-                )
-                fresh = f_state.join(d_live, "pk").select(
-                    "seq", "pk", "event_type", F.col("value").alias("fact_value"), "dim_value"
-                )
-            fresh = fresh.withColumn("bucket", F.pmod(F.hash("pk"), nb)).withColumn(
-                "dead", F.lit(False)
-            )
-            content = fresh
-            if self.view_store.exists():
-                tkey = F.broadcast(touched.withColumn("_t", F.lit(True)))
-                existing = (
-                    self.view_store.read_buckets(spark, tb)
-                    .filter(~F.col("dead"))
-                    .join(tkey, "pk", "left")
-                    # retracted rows stay as dead markers so an
-                    # all-retracted bucket still commits its rewrite
-                    .withColumn("dead", F.col("_t").isNotNull())
-                    .select(*_VIEW_COLS, "dead", "bucket")
-                )
-                content = existing.unionByName(fresh)
-            self.view_store.write_buckets(content.repartition(self.n_buckets, "bucket"))
-        finally:
-            rows.unpersist()
-
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Maintenance pass: drop the view store's dead markers and, with
-        ``tombstone_horizon``, GC the DIM store's delete tombstones older
-        than the replay watermark (see BucketedUpsertSink.compact for the
-        resurrection-safety contract).  The FACTS store is deliberately
-        not GC'd: there op='d' rows are real event records — delete
-        events are facts that join the live dim in the view — not
-        key-deletion tombstones.  O(state) — schedule like compaction,
-        not per batch."""
-        self._recover()
-        if tombstone_horizon is not None:
-            self.dim.compact(spark, tombstone_horizon)
+        # 3-4. view: retract + re-derive for the batch's keys only,
+        # reading facts'/dim' pruned to the touched pk buckets
+        touched = rows.select("pk").distinct()
+        tb = touched.select(F.pmod(F.hash("pk"), nb).alias("bucket"))
+        f_state = self.facts.pruned_read(spark, tb).join(F.broadcast(touched), "pk", "leftsemi")
+        d_live = (
+            self.dim.pruned_read(spark, tb)
+            .join(F.broadcast(touched), "pk", "leftsemi")
+            .filter(F.col("op") != "d")
+            .select("pk", F.col("value").alias("dim_value"))
+        )
+        fresh = (
+            f_state.join(d_live, "pk")
+            .select("seq", "pk", "event_type", F.col("value").alias("fact_value"), "dim_value")
+            .withColumn("bucket", F.pmod(F.hash("pk"), nb))
+            .withColumn("dead", F.lit(False))
+        )
+        content = fresh
         if self.view_store.exists():
-            kept = spark.read.parquet(self.view_store.path).filter(~F.col("dead"))
-            self.view_store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
+            tkey = F.broadcast(touched.withColumn("_t", F.lit(True)))
+            existing = (
+                self.view_store.read_buckets(spark, tb)
+                .filter(~F.col("dead"))
+                .join(tkey, "pk", "left")
+                # retracted rows stay as dead markers so an
+                # all-retracted bucket still commits its rewrite
+                .withColumn("dead", F.col("_t").isNotNull())
+                .select(*_VIEW_COLS, "dead", "bucket")
+            )
+            content = existing.unionByName(fresh)
+        self.view_store.write_buckets(content.repartition(self.n_buckets, "bucket"))
 
     def view(self, spark: SparkSession) -> DataFrame:
         """The live enriched view."""

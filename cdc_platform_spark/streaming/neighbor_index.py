@@ -48,8 +48,6 @@ shuffle join instead of forcing a corpus-sized broadcast.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -59,10 +57,8 @@ from cdc_platform_spark.operators.dedup import (
     dot_long,
     srp_bands,
 )
-from cdc_platform_spark.streaming.pipeline import (
-    BucketedUpsertSink,
-    _BucketStore,
-)
+from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+from cdc_platform_spark.streaming.views import MultiStoreView
 
 _VIEW_SCHEMA = "vec_id long, nn_id long, cosine double, is_dup long"
 
@@ -80,21 +76,19 @@ class _VecIndexSink(BucketedUpsertSink):
     )
 
 
-class CosineNeighborIndexSink:
+class CosineNeighborIndexSink(MultiStoreView):
     """Materialized best-cosine-neighbor view over an embedding CDC
-    stream of (vec_id, offset, op, a)."""
+    stream of (vec_id, offset, op, a); index, bands and best commit in
+    that order under the
+    :class:`~cdc_platform_spark.streaming.views.MultiStoreView` protocol."""
 
-    def __init__(self, path: str, n_buckets: int = 16) -> None:
-        self.index = _VecIndexSink(f"{path}/index", n_buckets)
-        self.bands = _BucketStore(f"{path}/bands", n_buckets)
-        self.best = _BucketStore(f"{path}/best", n_buckets)
-        self.n_buckets = n_buckets
-        os.makedirs(path, exist_ok=True)
+    _DEAD_ROW_STORES = ("best",)
 
-    def _recover(self) -> None:
-        self.index._recover()
-        self.bands._recover()
-        self.best._recover()
+    def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
+        super().__init__(path, n_buckets, read_only)
+        self.index = self._open("index", _VecIndexSink)
+        self.bands = self._open("bands")
+        self.best = self._open("best")
 
     def _batch_rows(self, batch: DataFrame) -> DataFrame:
         """Latest row per vec + norm + banded SRP signature (the batch
@@ -169,10 +163,8 @@ class CosineNeighborIndexSink:
             .distinct()
         )
 
-    def write(self, batch: DataFrame) -> None:
-        """Apply one micro-batch.
-
-        Every intermediate that later seeds a pruned read's DPP subquery
+    def _apply(self, batch: DataFrame, keep) -> None:
+        """Every intermediate that later seeds a pruned read's DPP subquery
         or is consumed by several jobs is an EAGER ``localCheckpoint``,
         not a ``persist``: these frames are all touched-set-sized (batch
         vectors, their band-mates, candidate hits — never the corpus),
@@ -191,9 +183,6 @@ class CosineNeighborIndexSink:
         DPP subqueries, replicated blocks.  Single-JVM local mode (this
         container) has no partial-executor-loss case, so the cheaper
         form is used here."""
-        if not batch.take(1):
-            return  # empty/replayed-out micro-batch: all views unchanged
-        self._recover()
         spark = batch.sparkSession
         nb = F.lit(self.n_buckets)
 
@@ -358,34 +347,19 @@ class CosineNeighborIndexSink:
             content = existing.unionByName(fresh_rows)
         self.best.write_buckets(content.repartition(self.n_buckets, "bucket"))
 
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Maintenance pass (same shape as BucketedMinHashIndexSink.compact):
-        rewrite the band buckets keeping only CURRENT rows — each (vec,
-        band, val) must match the live index's signature — and drop the
-        best store's dead markers and superseded reverse pointers.
-        Correctness never requires this (probes currency-check and the
-        view filters dead rows); it reclaims the dead weight superset
-        maintenance leaves in rarely-rewritten buckets.  With
-        ``tombstone_horizon``, index delete tombstones older than the
-        replay watermark are GC'd too (see BucketedUpsertSink.compact).
-        O(index) — schedule like compaction, not per batch."""
-        self._recover()
-        if tombstone_horizon is not None:
-            self.index.compact(spark, tombstone_horizon)
-        nb = F.lit(self.n_buckets)
+    def _compact_derived(self, spark: SparkSession) -> None:
+        """Rewrite the band buckets keeping only CURRENT rows — each (vec,
+        band, val) must match the live index's signature — then drop the
+        best store's dead markers and superseded reverse pointers.  Probes
+        currency-check, so this only reclaims the dead weight superset
+        maintenance leaves in rarely-rewritten buckets."""
         if self.bands.exists():
             live = self.index.raw_state(spark).filter(
                 (F.col("op") != "d") & F.col("bvals").isNotNull()
             )
             current = self._band_rows(live).select("vec_id", "band", "val", "bucket")
             self.bands.rewrite_all(current.repartition(self.n_buckets, "bucket"))
-        if self.best.exists():
-            kept = (
-                spark.read.parquet(self.best.path)
-                .filter(~F.col("dead"))
-                .select("k", "o", "cosine", "rev", "dead", "bucket")
-            )
-            self.best.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
+        super()._compact_derived(spark)
 
     def view(self, spark: SparkSession) -> DataFrame:
         """(vec_id, nn_id, cosine, is_dup) for every live vector — equals

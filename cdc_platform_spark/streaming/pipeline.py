@@ -867,7 +867,19 @@ class _BucketStore(BucketedUpsertSink):
     algebra rather than a keyed latest-per-key merge (the band / pair /
     join-view tables of streaming/dedup_index.py and join_view.py).
     The inherited upsert merge methods (_updates/_merged/write/state) are
-    intentionally unused."""
+    intentionally unused.  ``schema`` (DDL, without ``bucket``) types the
+    empty-store reads."""
+
+    def __init__(
+        self,
+        path: str,
+        n_buckets: int = 16,
+        read_only: bool = False,
+        schema: str | None = None,
+    ) -> None:
+        super().__init__(path, n_buckets, read_only=read_only)
+        if schema is not None:
+            self._STATE_SCHEMA = schema
 
     def read_buckets(self, spark: SparkSession, buckets: DataFrame) -> DataFrame:
         """DPP-pruned read of the buckets named by ``buckets.bucket``."""

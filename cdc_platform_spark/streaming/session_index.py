@@ -6,8 +6,9 @@ stream``) is append-only, while real CDC carries event UPDATES and
 DELETES — an update can move an event across users or across time, and a
 delete can SPLIT a session in two (remove the bridging event) just as an
 insert can MERGE two sessions into one.  None of that is expressible
-with watermarked session windows; it is exactly the copy-on-write
-recompute-the-touched-group pattern the rest of the streaming layer uses.
+with watermarked session windows; it is exactly the recompute-the-
+touched-group pattern of :class:`~cdc_platform_spark.streaming.views.
+GroupedRecomputeView`, which owns the commit order and replay argument.
 
 Reference-free north-star scope: the reference platform (an asyncio CDC
 transport, pipeline/runner.py) has no windowed analytics at all — this
@@ -25,83 +26,33 @@ driver oracle and the equivalence tests):
         n_events         = COUNT(*)
         value_sum        = SUM(DECIMAL(18,2) value) cast to DOUBLE
 
-Storage layout — three per-bucket copy-on-write stores (the journaled
-atomic-commit machinery of streaming/pipeline.py):
+Storage layout — the group key is ``user_id``:
 
 - **index/** — per-event latest (event_id, offset, op, user_id, t_us,
-  value) keyed-merged by ``hash(event_id)`` (tombstones retained): the
-  authoritative record of each event's CURRENT version, and the store
-  that answers "which user did this event belong to BEFORE the batch"
-  (an update can move an event between users — both users' sessions
-  must be recomputed).
-- **user_events/** — the same live events re-clustered by
-  ``hash(user_id)``: the per-user event log a session recompute reads,
-  DPP-pruned to the touched users' buckets.  EXACT (dead markers for
-  retracted rows, dropped on the bucket's next rewrite): a stale row
-  would silently shift a session boundary, which no cheap read-time
-  check can detect.
+  value) keyed by ``hash(event_id)``: the record of each event's owner
+  BEFORE the batch (an update moving an event between users recomputes
+  both users' sessions).
+- **user_events/** — the live events re-clustered by ``hash(user_id)``:
+  the per-user event log a session recompute reads.
 - **sessions/** — the serve view: one (user_id, session_start_us,
-  n_events, value_sum) row per session, bucketed by ``hash(user_id)``,
-  so a serving read scans four narrow columns and touches no events.
+  n_events, value_sum) row per session, bucketed by ``hash(user_id)``.
 
-The affected set per batch is the TOUCHED USERS (old owners ∪ new owners
-of the batch's events) — sessions have no cross-user coupling, so unlike
-the span index there is no threshold-crossing propagation: the recompute
-is per-user-local, reading only the touched users' live events.  Every
-scan is DPP-pruned to the touched events' / users' buckets: batch cost
-is batch-adjacent, never corpus-proportional.  The per-user recompute
-runs a window partitioned by user over the touched users' events only —
-bounded by per-key history, the same boundedness as any per-key window.
-No broadcast hints anywhere (verdict r12 on the span index): the touched
-sets are micro-batch-proportional and AQE broadcasts them at runtime
-when small, while a giant ``availableNow`` first wave stays a shuffle
-join instead of forcing a corpus-sized broadcast.
-
-Exactness under replay — the commit-ORDER argument (same as
-streaming/span_index.py): stores commit **user_events → sessions →
-index**, the per-event index LAST.  Every derived quantity is a function
-of (batch rows, pre-merge index, non-touched rows of the affected
-buckets) — all untouched until the final commit, so a crash after ANY
-prefix of the sequence replays to the identical computation; the
-user_events rewrite is idempotent (the replayed retraction marks the
-crashed attempt's fresh rows dead and re-adds them), and sessions are
-RECOMPUTED from exact state for every touched user (never
-delta-updated), so double application is impossible.
-
-A cross-store marker file brackets the commits (write AND compact) for
-concurrent read-only serves, exactly like BucketedSpanIndexSink; serving
-processes additionally bracket collects with ``state_fingerprint`` +
-check-read-recheck.
+The per-user recompute runs a window partitioned by user over the
+touched users' events only — bounded by per-key history, the same
+boundedness as any per-key window.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_platform_spark.streaming.pipeline import (
-    BucketedUpsertSink,
-    StateInFlightError,
-    _BucketStore,
-)
-from cdc_platform_spark.streaming.span_index import _clear_marker, _set_marker
+from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+from cdc_platform_spark.streaming.views import GroupedRecomputeView
 
 #: session gap in microseconds — 30 minutes, the w_session_per_user gap
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
-_EVENT_SCHEMA = (
-    "event_id long, offset long, op string, user_id long, t_us long, "
-    "value decimal(18,2)"
-)
-_USER_EVENTS_SCHEMA = (
-    "user_id long, event_id long, t_us long, value decimal(18,2), dead boolean"
-)
-_SESSIONS_SCHEMA = (
-    "user_id long, session_start_us long, n_events long, "
-    "value_sum decimal(28,2), dead boolean"
-)
 _SERVE_SCHEMA = (
     "user_id long, session_start_us long, n_events long, value_sum double"
 )
@@ -140,263 +91,45 @@ class _SessionEventIndexSink(BucketedUpsertSink):
 
     _COLS = ["event_id", "offset", "op", "user_id", "t_us", "value"]
     _KEY = "event_id"
-    _STATE_SCHEMA = _EVENT_SCHEMA
+    _STATE_SCHEMA = (
+        "event_id long, offset long, op string, user_id long, t_us long, "
+        "value decimal(18,2)"
+    )
 
 
-class BucketedSessionStatsSink:
+class BucketedSessionStatsSink(GroupedRecomputeView):
     """Maintains exact per-user session aggregates under event CDC.
 
-    See the module docstring for the store layout and the commit-order
-    replay argument.  API mirrors BucketedSpanIndexSink: ``write`` per
-    micro-batch (foreachBatch), ``session_stats`` as the serve view,
-    ``sessions_from_scratch`` as the flat full-recompute form (the
-    equivalence anchor), ``compact`` as the scheduled maintenance pass,
-    ``state_fingerprint`` for the check-read-recheck serving protocol.
+    ``write`` per micro-batch (foreachBatch), ``session_stats`` as the
+    serve view, ``sessions_from_scratch`` as the flat full-recompute form
+    (the equivalence anchor), ``compact`` as the scheduled maintenance
+    pass, ``state_fingerprint`` for the check-read-recheck serving
+    protocol.
     """
 
-    def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
-        self.path = path
-        self.n_buckets = n_buckets
-        self.index = _SessionEventIndexSink(
-            f"{path}/index", n_buckets=n_buckets, read_only=read_only
-        )
-        self.user_events = _BucketStore(
-            f"{path}/user_events", n_buckets=n_buckets, read_only=read_only
-        )
-        self.user_events._STATE_SCHEMA = _USER_EVENTS_SCHEMA
-        self.sessions = _BucketStore(
-            f"{path}/sessions", n_buckets=n_buckets, read_only=read_only
-        )
-        self.sessions._STATE_SCHEMA = _SESSIONS_SCHEMA
-        self.read_only = read_only
-        if not read_only:
-            os.makedirs(path, exist_ok=True)
+    _INDEX = _SessionEventIndexSink
+    _KEY = ("user_id",)
+    _LOG = "user_events"
+    _LOG_SCHEMA = "user_id long, event_id long, t_us long, value decimal(18,2), dead boolean"
+    _VIEW = "sessions"
+    _VIEW_SCHEMA = (
+        "user_id long, session_start_us long, n_events long, "
+        "value_sum decimal(28,2), dead boolean"
+    )
+    _recompute = staticmethod(sessionize)
 
-    # --- cross-store batch marker (same protocol as the span sink) ------
-    @property
-    def _stores_marker(self) -> str:
-        return f"{self.path}/_writer-inflight"
+    def _log_rows(self, live: DataFrame) -> DataFrame:
+        return live.select("user_id", "event_id", "t_us", "value")
 
-    def state_fingerprint(self) -> tuple:
-        from cdc_platform_spark.streaming.serving import fs_fingerprint
-
-        return fs_fingerprint(
-            [self.index.path, self.user_events.path, self.sessions.path],
-            [self._stores_marker],
-        )
-
-    def _recover(self) -> None:
-        self.index._recover()
-        self.user_events._recover()
-        self.sessions._recover()
-        if self.read_only and os.path.exists(self._stores_marker):
-            raise StateInFlightError(
-                f"{self._stores_marker}: a writer batch is mid-commit across "
-                "the session index/user_events/sessions stores (or crashed "
-                "mid-batch and will replay) — retry after it completes"
-            )
-
-    # --- per-batch maintenance ------------------------------------------
-    def _batch_rows(self, batch: DataFrame) -> DataFrame:
-        """Latest row per event within the batch (out-of-order and
-        duplicate deliveries collapse here), value pinned to the exact
-        DECIMAL the batch oracle sums."""
-        latest = (
-            batch.filter(F.col("op").isNotNull())
-            .groupBy("event_id")
-            .agg(
-                F.max_by(
-                    F.struct("offset", "op", "user_id", "t_us", "value"),
-                    F.col("offset"),
-                ).alias("m")
-            )
-            .select("event_id", "m.*")
-        )
-        return latest.select(
-            "event_id",
-            "offset",
-            "op",
+    @staticmethod
+    def _serve(df: DataFrame) -> DataFrame:
+        return df.select(
             "user_id",
-            "t_us",
-            F.col("value").cast("decimal(18,2)").alias("value"),
+            "session_start_us",
+            "n_events",
+            F.col("value_sum").cast("double").alias("value_sum"),
         )
 
-    def _empty(self, spark: SparkSession, schema: str) -> DataFrame:
-        return spark.createDataFrame([], f"{schema}, bucket int")
-
-    def write(self, batch: DataFrame) -> bool:
-        """Apply one CDC micro-batch; returns False for the empty no-op."""
-        if not batch.take(1):
-            return False
-        if self.read_only:
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "writes belong to the pipeline process"
-            )
-        self._recover()
-        spark = batch.sparkSession
-        nb = F.lit(self.n_buckets)
-
-        # deliberately NOT cleared on exception — a failed batch leaves
-        # the stores genuinely mid-batch until the checkpoint replays it
-        _set_marker(self._stores_marker)
-
-        rows = self._batch_rows(batch).persist()
-        persisted = [rows]
-        try:
-            touched = rows.select("event_id")  # distinct by construction
-            tb = touched.select(F.pmod(F.hash("event_id"), nb).alias("bucket"))
-
-            # pre-merge index rows of the touched events (the
-            # authoritative OLD versions, including the old OWNER) — read
-            # BEFORE the index commits, which is what makes every
-            # quantity below replay-stable
-            old_full = (
-                self.index.pruned_read(spark, tb)
-                .join(touched, "event_id", "leftsemi")
-                .select("event_id", "offset", "op", "user_id", "t_us", "value")
-                if self.index.exists()
-                else spark.createDataFrame([], _EVENT_SCHEMA)
-            )
-
-            # what WILL win the index merge (an out-of-order batch may
-            # carry an older version than the index already holds)
-            winner = (
-                rows.select("event_id", "offset", "op", "user_id", "t_us", "value")
-                .unionByName(old_full)
-                .groupBy("event_id")
-                .agg(
-                    F.max_by(
-                        F.struct("offset", "op", "user_id", "t_us", "value"),
-                        F.col("offset"),
-                    ).alias("m")
-                )
-                .select("event_id", "m.op", "m.user_id", "m.t_us", "m.value")
-            )
-            new_live = (
-                winner.filter(
-                    (F.col("op") != "d")
-                    & F.col("user_id").isNotNull()
-                    & F.col("t_us").isNotNull()
-                )
-                .select("event_id", "user_id", "t_us", "value")
-                .persist()
-            )
-            persisted.append(new_live)
-
-            # touched users: OLD owners (a live pre-version anywhere) ∪
-            # NEW owners — an update moving an event between users must
-            # recompute BOTH users' sessions
-            touched_users = (
-                old_full.filter((F.col("op") != "d") & F.col("user_id").isNotNull())
-                .select("user_id")
-                .unionByName(new_live.select("user_id"))
-                .distinct()
-                .persist()
-            )
-            persisted.append(touched_users)
-            ub = touched_users.select(F.pmod(F.hash("user_id"), nb).alias("bucket"))
-
-            # 1. user_events rewrite over the touched users' buckets: keep
-            # the untouched events, drop the touched ones (dead markers
-            # keep emptied buckets committing), add the winners' live rows
-            before_live = (
-                self.user_events.read_buckets(spark, ub).filter(~F.col("dead"))
-                if self.user_events.exists()
-                else self._empty(spark, _USER_EVENTS_SCHEMA)
-            )
-            kept = before_live.join(touched, "event_id", "leftanti")
-            dead_rows = (
-                before_live.join(touched, "event_id", "leftsemi")
-                .select("user_id", "event_id", "t_us", "value", "bucket")
-                .withColumn("dead", F.lit(True))
-            )
-            fresh = new_live.select(
-                "user_id", "event_id", "t_us", "value"
-            ).withColumn("bucket", F.pmod(F.hash("user_id"), nb)).withColumn(
-                "dead", F.lit(False)
-            )
-            ue_content = (
-                kept.select("user_id", "event_id", "t_us", "value", "bucket", "dead")
-                .unionByName(
-                    fresh.select("user_id", "event_id", "t_us", "value", "bucket", "dead")
-                )
-                .unionByName(
-                    dead_rows.select(
-                        "user_id", "event_id", "t_us", "value", "bucket", "dead"
-                    )
-                )
-            )
-            self.user_events.write_buckets(
-                ue_content.repartition(self.n_buckets, "bucket")
-            )
-
-            # 2. RECOMPUTE (never delta) each touched user's sessions from
-            # the post-rewrite exact per-user event log, DPP-pruned to the
-            # touched users' buckets.  exists() re-checked: a delete-only
-            # first batch may have committed no bucket at all.
-            ue_after = (
-                self.user_events.read_buckets(spark, ub).filter(~F.col("dead"))
-                if self.user_events.exists()
-                else self._empty(spark, _USER_EVENTS_SCHEMA)
-            )
-            recomputed = sessionize(
-                ue_after.join(touched_users, "user_id", "leftsemi").select(
-                    "user_id", "event_id", "t_us", "value"
-                )
-            ).persist()
-            persisted.append(recomputed)
-
-            # 3. sessions rewrite over the touched users' buckets: keep
-            # the other users' rows, replace the touched users' (dead
-            # markers for users who left the view entirely)
-            existing = (
-                self.sessions.read_buckets(spark, ub)
-                .filter(~F.col("dead"))
-                .join(touched_users, "user_id", "leftanti")
-                .select("user_id", "session_start_us", "n_events", "value_sum", "bucket")
-                .withColumn("dead", F.lit(False))
-                if self.sessions.exists()
-                else self._empty(spark, _SESSIONS_SCHEMA)
-            )
-            gone = (
-                touched_users.join(recomputed.select("user_id"), "user_id", "leftanti")
-                .select(
-                    "user_id",
-                    F.lit(0).cast("long").alias("session_start_us"),
-                    F.lit(0).cast("long").alias("n_events"),
-                    F.lit(None).cast("decimal(28,2)").alias("value_sum"),
-                )
-                .withColumn("dead", F.lit(True))
-            )
-            sess_content = (
-                recomputed.withColumn("value_sum", F.col("value_sum").cast("decimal(28,2)"))
-                .withColumn("dead", F.lit(False))
-                .unionByName(gone)
-                .withColumn("bucket", F.pmod(F.hash("user_id"), nb))
-                .select(
-                    "user_id", "session_start_us", "n_events", "value_sum", "dead", "bucket"
-                )
-                .unionByName(
-                    existing.select(
-                        "user_id", "session_start_us", "n_events", "value_sum",
-                        "dead", "bucket",
-                    )
-                )
-            )
-            self.sessions.write_buckets(
-                sess_content.repartition(self.n_buckets, "bucket")
-            )
-
-            # 4. the per-event index commits LAST — the replay anchor
-            self.index.write(rows)
-        finally:
-            for df_ in persisted:
-                df_.unpersist()
-        _clear_marker(self._stores_marker)
-        return True
-
-    # --- serve + maintenance ----------------------------------------------
     def session_stats(
         self, spark: SparkSession, user_id: int | None = None
     ) -> DataFrame:
@@ -418,63 +151,9 @@ class BucketedSessionStatsSink:
             )
         else:
             src = spark.read.parquet(self.sessions.path)
-        return (
-            src.filter(~F.col("dead"))
-            .select(
-                "user_id",
-                "session_start_us",
-                "n_events",
-                F.col("value_sum").cast("double").alias("value_sum"),
-            )
-        )
+        return self._serve(src.filter(~F.col("dead")))
 
     def sessions_from_scratch(self, spark: SparkSession) -> DataFrame:
-        """The FLAT form: full recompute from the authoritative per-event
-        index (O(state) — the UpsertSink-style shape a test deployment
-        runs).  The bucketed serve view must equal this after every batch
-        — the flat-vs-bucketed equivalence anchor."""
-        self._recover()
-        live = (
-            self.index.state(spark)
-            .filter(F.col("user_id").isNotNull() & F.col("t_us").isNotNull())
-            .select("event_id", "user_id", "t_us", "value")
-        )
-        return sessionize(live).select(
-            "user_id",
-            "session_start_us",
-            "n_events",
-            F.col("value_sum").cast("double").alias("value_sum"),
-        )
-
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Scheduled maintenance: drop the dead markers retraction leaves
-        in the user_events/sessions buckets (correctness never needs this
-        — every read filters them; it reclaims storage), and optionally
-        GC index tombstones below the replay watermark.  Bracketed with
-        the cross-store marker like :meth:`write` (see
-        BucketedSpanIndexSink.compact for the rationale); idempotent, so
-        the maintenance scheduler's retry clears a crashed attempt."""
-        if self.read_only:
-            # refuse BEFORE touching the marker (ADVICE r13): a read_only
-            # compact must not strand a cross-store marker that blocks
-            # every serve until the writer's next write clears it
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "compaction belongs to the maintenance process"
-            )
-        self._recover()
-        _set_marker(self._stores_marker)
-        if tombstone_horizon is not None:
-            self.index.compact(spark, tombstone_horizon)
-        for store in (self.user_events, self.sessions):
-            if store.exists():
-                kept = spark.read.parquet(store.path).filter(~F.col("dead"))
-                store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
-        _clear_marker(self._stores_marker)
-
-    def state_stats(self, spark: SparkSession) -> dict:
-        return {
-            "index": self.index.state_stats(spark),
-            "user_events": self.user_events.state_stats(spark),
-            "sessions": self.sessions.state_stats(spark),
-        }
+        """The flat full recompute from the per-event index — the serve
+        view must equal it after every batch."""
+        return self._serve(self._from_scratch(spark))

@@ -20,41 +20,33 @@ oracle and the equivalence tests):
         shared_fraction = n_shared_spans / n_spans
         is_flagged      = shared_fraction > SPAN_FLAG_THRESHOLD
 
-Storage layout — three per-bucket copy-on-write stores (the journaled
-atomic-commit machinery of streaming/pipeline.py):
+Storage layout — three stores under the
+:class:`~cdc_platform_spark.streaming.views.MultiStoreView` protocol,
+committed **postings → stats → index** (the per-doc index LAST, the
+replay anchor):
 
 - **index/** — per-document latest (doc_id, offset, op, n_spans, grams)
-  keyed-merged by ``hash(doc_id)`` (tombstones retained): the
-  authoritative record of each document's CURRENT gram set.
+  keyed by ``hash(doc_id)`` (tombstones retained): the authoritative
+  record of each document's CURRENT gram set.
 - **postings/** — the inverted file: one (gh, doc_id) row per live
   document-gram, bucketed by ``hash(gh)``.  Unlike the minhash sink's
   band store this is EXACT (no stale rows, no serve-time currency
   checks), because document frequency is a COUNT — a stale posting row
-  would silently shift df across the dup threshold, which no cheap
-  read-time check can detect.  Retracted rows are written back with
-  ``dead=true`` (a bucket emptied by retraction still commits) and
-  dropped on the bucket's next rewrite.
+  would silently shift df across the dup threshold.
 - **stats/** — the serve view: one (doc_id, n_spans, n_shared_spans) row
   per live long-enough document, bucketed by ``hash(doc_id)``, so a
   serving read scans three narrow columns and touches no text, no
   grams, no postings.
 
-Exactness under replay — the commit-ORDER argument (the design choice
-that replaces the minhash sink's superset-plus-currency-check): stores
-commit **postings → stats → index**, the per-doc index LAST.  Every
-derived quantity is a function of (batch rows, pre-merge index, posting
-rows of NON-touched docs) — all three are untouched until the final
-commit, so a crash after ANY prefix of the sequence replays to the
-identical computation:
+Every derived quantity is a function of (batch rows, pre-merge index,
+posting rows of NON-touched docs):
 
 - retraction targets (a touched doc's OLD posting rows) come from its
   pre-merge index grams, not from scanning the posting store;
 - df-before/df-after per gram = (count over non-touched posting rows)
   + (old / new gram counts of touched docs) — never read from the
   possibly-already-rewritten affected buckets, so a replayed batch
-  computes the same dup-threshold crossings as the crashed one;
-- stats are RECOMPUTED from exact state for every affected doc (never
-  delta-updated), so double application is impossible.
+  computes the same dup-threshold crossings as the crashed one.
 
 The affected set per batch — the docs whose stats rows are rewritten —
 is (touched docs) ∪ (non-touched docs holding a gram whose df crossed
@@ -62,22 +54,9 @@ the >= 2 threshold), and every scan in the batch is DPP-pruned to the
 touched docs' / grams' buckets: batch cost is batch-adjacent, never
 corpus-proportional.  At 100 TB the whole-corpus work happens exactly
 once (the initial insert wave), amortized across its micro-batches.
-The touched/cross_docs semi/anti joins carry NO broadcast hint (verdict
-r12): under bounded triggers both sets are micro-batch-proportional and
-AQE broadcasts them at runtime anyway, while a giant ``availableNow``
-first wave in one batch stays a shuffle join instead of forcing a
-corpus-sized broadcast.
-
-A cross-store marker file brackets the three commits for concurrent
-read-only serves, exactly like BucketedMinHashIndexSink (see that
-class's marker commentary); serving processes additionally bracket
-collects with ``state_fingerprint`` + check-read-recheck.
 """
 
 from __future__ import annotations
-
-import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,14 +66,9 @@ from cdc_platform_spark.operators.dedup import (
     SPAN_NGRAM,
     span_gram_hashes_col,
 )
-from cdc_platform_spark.streaming.pipeline import (
-    BucketedUpsertSink,
-    StateInFlightError,
-    _BucketStore,
-)
+from cdc_platform_spark.streaming.pipeline import BucketedUpsertSink
+from cdc_platform_spark.streaming.views import MultiStoreView
 
-_POSTINGS_SCHEMA = "gh long, doc_id long, dead boolean"
-_STATS_SCHEMA = "doc_id long, n_spans long, n_shared_spans long, dead boolean"
 _SPAN_STATS_SCHEMA = (
     "doc_id long, n_spans long, n_shared_spans long, "
     "shared_fraction double, is_flagged long"
@@ -111,52 +85,24 @@ class _SpanDocIndexSink(BucketedUpsertSink):
     _STATE_SCHEMA = "doc_id long, offset long, op string, n_spans long, grams array<long>"
 
 
-class BucketedSpanIndexSink:
+class BucketedSpanIndexSink(MultiStoreView):
     """Maintains exact duplicated-span statistics under document CDC.
 
-    See the module docstring for the store layout and the commit-order
-    replay argument.  API mirrors BucketedMinHashIndexSink: ``write`` per
-    micro-batch (foreachBatch), ``span_stats`` as the serve view,
-    ``compact`` as the scheduled maintenance pass, ``state_fingerprint``
-    for the check-read-recheck serving protocol.
+    ``write`` per micro-batch (foreachBatch), ``span_stats`` as the serve
+    view, ``compact`` as the scheduled maintenance pass,
+    ``state_fingerprint`` for the check-read-recheck serving protocol.
     """
 
+    _DEAD_ROW_STORES = ("postings", "stats")
+
     def __init__(self, path: str, n_buckets: int = 16, read_only: bool = False) -> None:
-        self.path = path
-        self.index = _SpanDocIndexSink(f"{path}/index", n_buckets, read_only=read_only)
-        self.postings = _BucketStore(f"{path}/postings", n_buckets, read_only=read_only)
-        self.stats = _BucketStore(f"{path}/stats", n_buckets, read_only=read_only)
-        self.stats._STATE_SCHEMA = _STATS_SCHEMA  # for empty point reads
-        self.n_buckets = n_buckets
-        self.read_only = read_only
-        if not read_only:
-            os.makedirs(path, exist_ok=True)
-
-    # --- cross-store batch marker (same protocol as the minhash sink) ---
-    @property
-    def _stores_marker(self) -> str:
-        return f"{self.path}/_writer-inflight"
-
-    def state_fingerprint(self) -> tuple:
-        from cdc_platform_spark.streaming.serving import fs_fingerprint
-
-        return fs_fingerprint(
-            [self.index.path, self.postings.path, self.stats.path],
-            [self._stores_marker],
+        super().__init__(path, n_buckets, read_only)
+        self.index = self._open("index", _SpanDocIndexSink)
+        self.postings = self._open("postings", schema="gh long, doc_id long, dead boolean")
+        self.stats = self._open(
+            "stats", schema="doc_id long, n_spans long, n_shared_spans long, dead boolean"
         )
 
-    def _recover(self) -> None:
-        self.index._recover()
-        self.postings._recover()
-        self.stats._recover()
-        if self.read_only and os.path.exists(self._stores_marker):
-            raise StateInFlightError(
-                f"{self._stores_marker}: a writer batch is mid-commit across "
-                "the span index/postings/stats stores (or crashed mid-batch "
-                "and will replay) — retry after it completes"
-            )
-
-    # --- per-batch maintenance -------------------------------------------
     def _batch_rows(self, batch: DataFrame) -> DataFrame:
         """Latest row per doc within the batch, with the gram hashes of
         the batch operator (span_gram_hashes_col — ONE definition, so
@@ -179,235 +125,168 @@ class BucketedSpanIndexSink:
             grams.alias("grams"),
         ).withColumn("n_spans", F.size("grams").cast("long"))
 
-    def _empty(self, spark: SparkSession, schema: str) -> DataFrame:
-        return spark.createDataFrame([], f"{schema}, bucket int")
-
-    def write(self, batch: DataFrame) -> bool:
-        """Apply one CDC micro-batch; returns False for the empty no-op."""
-        if not batch.take(1):
-            return False
-        if self.read_only:
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "writes belong to the pipeline process"
-            )
-        self._recover()
+    def _apply(self, batch: DataFrame, keep) -> None:
         spark = batch.sparkSession
         nb = F.lit(self.n_buckets)
+        rows = keep(self._batch_rows(batch))
+        touched = rows.select("doc_id")  # distinct by construction
+        tb = touched.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
 
-        # bracket the multi-store commit sequence; deliberately NOT cleared
-        # on exception — a failed batch leaves the stores genuinely
-        # mid-batch until the checkpoint replays it
-        _set_marker(self._stores_marker)
+        # pre-merge index rows of the touched docs (the authoritative
+        # OLD gram sets) — read BEFORE the index commits, which is
+        # what makes every quantity below replay-stable
+        old_full = (
+            self.index.pruned_read(spark, tb)
+            .join(touched, "doc_id", "leftsemi")
+            .select("doc_id", "offset", "op", "n_spans", "grams")
+        )
 
-        rows = self._batch_rows(batch).persist()
-        persisted = [rows]
-        try:
-            touched = rows.select("doc_id")  # distinct by construction
-            tb = touched.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
+        # what WILL win the index merge (an out-of-order batch may
+        # carry an older version than the index already holds)
+        winner = (
+            rows.select("doc_id", "offset", "op", "n_spans", "grams")
+            .unionByName(old_full)
+            .groupBy("doc_id")
+            .agg(
+                F.max_by(
+                    F.struct("offset", "op", "n_spans", "grams"), F.col("offset")
+                ).alias("m")
+            )
+            .select("doc_id", "m.op", "m.n_spans", "m.grams")
+        )
+        new_live = keep(
+            winner.filter((F.col("op") != "d") & (F.col("n_spans") > 0))
+            .select("doc_id", "n_spans", "grams")
+        )
 
-            # pre-merge index rows of the touched docs (the authoritative
-            # OLD gram sets) — read BEFORE the index commits, which is
-            # what makes every quantity below replay-stable
-            old_full = (
-                self.index.pruned_read(spark, tb)
-                .join(touched, "doc_id", "leftsemi")
-                .select("doc_id", "offset", "op", "n_spans", "grams")
-                if self.index.exists()
-                else spark.createDataFrame([], self.index._STATE_SCHEMA)
-            )
+        ogb = keep(
+            old_full.filter((F.col("op") != "d") & (F.col("n_spans") > 0))
+            .select("doc_id", F.explode("grams").alias("gh"))
+            .withColumn("bucket", F.pmod(F.hash("gh"), nb))
+        )
+        ngb = keep(
+            new_live.select("doc_id", F.explode("grams").alias("gh"))
+            .withColumn("bucket", F.pmod(F.hash("gh"), nb))
+        )
 
-            # what WILL win the index merge (an out-of-order batch may
-            # carry an older version than the index already holds)
-            winner = (
-                rows.select("doc_id", "offset", "op", "n_spans", "grams")
-                .unionByName(old_full)
-                .groupBy("doc_id")
-                .agg(
-                    F.max_by(
-                        F.struct("offset", "op", "n_spans", "grams"), F.col("offset")
-                    ).alias("m")
-                )
-                .select("doc_id", "m.op", "m.n_spans", "m.grams")
-            )
-            new_live = (
-                winner.filter((F.col("op") != "d") & (F.col("n_spans") > 0))
-                .select("doc_id", "n_spans", "grams")
-                .persist()
-            )
-            persisted.append(new_live)
+        # 1. postings rewrite over exactly the old ∪ new gram buckets:
+        # drop the touched docs' rows (dead markers keep emptied
+        # buckets committing), add the winners' rows
+        abuckets = ogb.select("bucket").unionByName(ngb.select("bucket")).distinct()
+        before_live = self._live_rows(spark, self.postings, abuckets)
+        # non-touched rows: the replay-stable base of the df math —
+        # this batch never modifies them, crashed attempt or not
+        base = keep(before_live.join(touched, "doc_id", "leftanti"))
+        retracted = (
+            before_live.join(touched, "doc_id", "leftsemi")
+            .select("gh", "doc_id", "bucket")
+            .withColumn("dead", F.lit(True))
+        )
+        post_content = (
+            base.select("gh", "doc_id", "bucket")
+            .unionByName(ngb.select("gh", "doc_id", "bucket"))
+            .withColumn("dead", F.lit(False))
+            .unionByName(retracted)
+        )
+        self.postings.write_buckets(post_content.repartition(self.n_buckets, "bucket"))
 
-            ogb = (
-                old_full.filter((F.col("op") != "d") & (F.col("n_spans") > 0))
-                .select("doc_id", F.explode("grams").alias("gh"))
-                .withColumn("bucket", F.pmod(F.hash("gh"), nb))
-                .persist()
-            )
-            ngb = (
-                new_live.select("doc_id", F.explode("grams").alias("gh"))
-                .withColumn("bucket", F.pmod(F.hash("gh"), nb))
-                .persist()
-            )
-            persisted += [ogb, ngb]
+        # 2. dup-threshold crossings: df changes only through the
+        # touched docs' old/new gram counts, so
+        #   df_before = |non-touched rows| + |old touched grams|
+        #   df_after  = |non-touched rows| + |new touched grams|
+        # — computed WITHOUT reading the just-rewritten buckets
+        keys = ogb.select("bucket", "gh").unionByName(ngb.select("bucket", "gh")).distinct()
+        df_nt = base.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_nt"))
+        df_old = ogb.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_old"))
+        df_new = ngb.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_new"))
+        d = (
+            keys.join(df_nt, ["bucket", "gh"], "left")
+            .join(df_old, ["bucket", "gh"], "left")
+            .join(df_new, ["bucket", "gh"], "left")
+            .fillna(0, subset=["c_nt", "c_old", "c_new"])
+        )
+        crossing = d.filter(
+            ((F.col("c_nt") + F.col("c_old")) >= 2)
+            != ((F.col("c_nt") + F.col("c_new")) >= 2)
+        ).select("bucket", "gh")
 
-            # 1. postings rewrite over exactly the old ∪ new gram buckets:
-            # drop the touched docs' rows (dead markers keep emptied
-            # buckets committing), add the winners' rows
-            abuckets = ogb.select("bucket").unionByName(ngb.select("bucket")).distinct()
-            before_live = (
-                self.postings.read_buckets(spark, abuckets).filter(~F.col("dead"))
-                if self.postings.exists()
-                else self._empty(spark, _POSTINGS_SCHEMA)
+        # 3. affected docs = touched ∪ non-touched holders of a
+        # crossing gram (their shared counts moved without them
+        # changing) — the docs whose stats rows this batch rewrites
+        cross_docs = keep(
+            base.join(crossing, ["bucket", "gh"], "leftsemi").select("doc_id").distinct()
+        )
+        other_rows = (
+            self.index.pruned_read(
+                spark, cross_docs.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
             )
-            # non-touched rows: the replay-stable base of the df math —
-            # this batch never modifies them, crashed attempt or not
-            base = before_live.join(touched, "doc_id", "leftanti").persist()
-            persisted.append(base)
-            retracted = (
-                before_live.join(touched, "doc_id", "leftsemi")
-                .select("gh", "doc_id", "bucket")
-                .withColumn("dead", F.lit(True))
-            )
-            post_content = (
-                base.select("gh", "doc_id", "bucket")
-                .unionByName(ngb.select("gh", "doc_id", "bucket"))
-                .withColumn("dead", F.lit(False))
-                .unionByName(retracted)
-            )
-            self.postings.write_buckets(
-                post_content.repartition(self.n_buckets, "bucket")
-            )
+            .join(cross_docs, "doc_id", "leftsemi")
+            .filter((F.col("op") != "d") & (F.col("n_spans") > 0))
+            .select("doc_id", "n_spans", "grams")
+        )
+        doc_rows = keep(new_live.unionByName(other_rows))
 
-            # 2. dup-threshold crossings: df changes only through the
-            # touched docs' old/new gram counts, so
-            #   df_before = |non-touched rows| + |old touched grams|
-            #   df_after  = |non-touched rows| + |new touched grams|
-            # — computed WITHOUT reading the just-rewritten buckets
-            keys = ogb.select("bucket", "gh").unionByName(ngb.select("bucket", "gh")).distinct()
-            df_nt = base.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_nt"))
-            df_old = ogb.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_old"))
-            df_new = ngb.groupBy("bucket", "gh").agg(F.count(F.lit(1)).alias("c_new"))
-            d = (
-                keys.join(df_nt, ["bucket", "gh"], "left")
-                .join(df_old, ["bucket", "gh"], "left")
-                .join(df_new, ["bucket", "gh"], "left")
-                .fillna(0, subset=["c_nt", "c_old", "c_new"])
+        # 4. RECOMPUTE (never delta) each affected doc's shared count
+        # against the post-rewrite exact postings, DPP-pruned to the
+        # affected docs' gram buckets (re-read: a delete-only stream may
+        # still have committed no posting bucket at all)
+        eg = keep(
+            doc_rows.select("doc_id", F.explode("grams").alias("gh"))
+            .withColumn("bucket", F.pmod(F.hash("gh"), nb))
+        )
+        dup = (
+            self._live_rows(spark, self.postings, eg)
+            .groupBy("bucket", "gh")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") >= 2)
+            .select("bucket", "gh")
+        )
+        shared = (
+            eg.join(dup, ["bucket", "gh"], "leftsemi")
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n_shared_spans"))
+        )
+        live_stats = (
+            doc_rows.select("doc_id", "n_spans")
+            .join(shared, "doc_id", "left")
+            .select(
+                "doc_id",
+                "n_spans",
+                F.coalesce(F.col("n_shared_spans"), F.lit(0)).cast("long").alias(
+                    "n_shared_spans"
+                ),
             )
-            crossing = d.filter(
-                ((F.col("c_nt") + F.col("c_old")) >= 2)
-                != ((F.col("c_nt") + F.col("c_new")) >= 2)
-            ).select("bucket", "gh")
+        )
 
-            # 3. affected docs = touched ∪ non-touched holders of a
-            # crossing gram (their shared counts moved without them
-            # changing) — the docs whose stats rows this batch rewrites
-            cross_docs = (
-                base.join(crossing, ["bucket", "gh"], "leftsemi")
-                .select("doc_id")
-                .distinct()
-                .persist()
+        # 5. stats rewrite over the affected docs' buckets: keep the
+        # unaffected residents, replace the affected (dead markers for
+        # docs that left the view — deleted or shrunk below SPAN_NGRAM)
+        affected = touched.unionByName(cross_docs).distinct()
+        sb = affected.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
+        existing = self._live_rows(spark, self.stats, sb).join(affected, "doc_id", "leftanti")
+        gone = (
+            affected.join(live_stats.select("doc_id"), "doc_id", "leftanti")
+            .select(
+                "doc_id",
+                F.lit(0).cast("long").alias("n_spans"),
+                F.lit(0).cast("long").alias("n_shared_spans"),
             )
-            persisted.append(cross_docs)
+            .withColumn("dead", F.lit(True))
+        )
+        stats_content = (
+            live_stats.withColumn("dead", F.lit(False))
+            .unionByName(gone)
+            .withColumn("bucket", F.pmod(F.hash("doc_id"), nb))
+            .select("doc_id", "n_spans", "n_shared_spans", "dead", "bucket")
+            .unionByName(
+                existing.select("doc_id", "n_spans", "n_shared_spans", "dead", "bucket")
+            )
+        )
+        self.stats.write_buckets(stats_content.repartition(self.n_buckets, "bucket"))
 
-            other_rows = (
-                self.index.pruned_read(
-                    spark, cross_docs.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
-                )
-                .join(cross_docs, "doc_id", "leftsemi")
-                .filter((F.col("op") != "d") & (F.col("n_spans") > 0))
-                .select("doc_id", "n_spans", "grams")
-                if self.index.exists()
-                else spark.createDataFrame([], "doc_id long, n_spans long, grams array<long>")
-            )
-            doc_rows = new_live.unionByName(other_rows).persist()
-            persisted.append(doc_rows)
+        # 6. the per-doc index commits LAST — the replay anchor
+        self.index.write(rows)
 
-            # 4. RECOMPUTE (never delta) each affected doc's shared count
-            # against the post-rewrite exact postings, DPP-pruned to the
-            # affected docs' gram buckets
-            eg = (
-                doc_rows.select("doc_id", F.explode("grams").alias("gh"))
-                .withColumn("bucket", F.pmod(F.hash("gh"), nb))
-                .persist()
-            )
-            persisted.append(eg)
-            # exists() re-checked: a delete-only stream may still have
-            # committed no posting bucket at all
-            post_after = (
-                self.postings.read_buckets(spark, eg).filter(~F.col("dead"))
-                if self.postings.exists()
-                else self._empty(spark, _POSTINGS_SCHEMA)
-            )
-            dup = (
-                post_after.groupBy("bucket", "gh")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") >= 2)
-                .select("bucket", "gh")
-            )
-            shared = (
-                eg.join(dup, ["bucket", "gh"], "leftsemi")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_shared_spans"))
-            )
-            live_stats = (
-                doc_rows.select("doc_id", "n_spans")
-                .join(shared, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    "n_spans",
-                    F.coalesce(F.col("n_shared_spans"), F.lit(0)).cast("long").alias(
-                        "n_shared_spans"
-                    ),
-                )
-            )
-
-            # 5. stats rewrite over the affected docs' buckets: keep the
-            # unaffected residents, replace the affected (dead markers for
-            # docs that left the view — deleted or shrunk below SPAN_NGRAM)
-            affected = touched.unionByName(cross_docs).distinct()
-            sb = affected.select(F.pmod(F.hash("doc_id"), nb).alias("bucket"))
-            existing = (
-                self.stats.read_buckets(spark, sb)
-                .filter(~F.col("dead"))
-                .join(affected, "doc_id", "leftanti")
-                .select("doc_id", "n_spans", "n_shared_spans", "bucket")
-                .withColumn("dead", F.lit(False))
-                if self.stats.exists()
-                else self._empty(spark, _STATS_SCHEMA)
-            )
-            gone = (
-                affected.join(live_stats.select("doc_id"), "doc_id", "leftanti")
-                .select(
-                    "doc_id",
-                    F.lit(0).cast("long").alias("n_spans"),
-                    F.lit(0).cast("long").alias("n_shared_spans"),
-                )
-                .withColumn("dead", F.lit(True))
-            )
-            stats_content = (
-                live_stats.withColumn("dead", F.lit(False))
-                .unionByName(gone)
-                .withColumn("bucket", F.pmod(F.hash("doc_id"), nb))
-                .select("doc_id", "n_spans", "n_shared_spans", "dead", "bucket")
-                .unionByName(
-                    existing.select(
-                        "doc_id", "n_spans", "n_shared_spans", "dead", "bucket"
-                    )
-                )
-            )
-            self.stats.write_buckets(
-                stats_content.repartition(self.n_buckets, "bucket")
-            )
-
-            # 6. the per-doc index commits LAST — the replay anchor
-            self.index.write(rows)
-        finally:
-            for df_ in persisted:
-                df_.unpersist()
-        _clear_marker(self._stores_marker)
-        return True
-
-    # --- serve + maintenance ----------------------------------------------
     def span_stats(self, spark: SparkSession, doc_id: int | None = None) -> DataFrame:
         """The serve view: exact duplicated-span statistics per live
         long-enough document — three narrow maintained columns plus two
@@ -436,56 +315,3 @@ class BucketedSpanIndexSink:
                 (frac > SPAN_FLAG_THRESHOLD).cast("long").alias("is_flagged"),
             )
         )
-
-    def compact(self, spark: SparkSession, tombstone_horizon: int | None = None) -> None:
-        """Scheduled maintenance: drop the dead markers retraction leaves
-        in the postings/stats buckets (correctness never needs this —
-        every read filters them; it reclaims storage), and optionally GC
-        index tombstones below the replay watermark.
-
-        The multi-store rewrite sequence is bracketed with the same
-        cross-store ``_writer-inflight`` marker as :meth:`write` (ADVICE
-        r12): today's compact is dead-row-only, so a crash between the
-        two rewrites would leave a state every read filters identically —
-        but that invariant was implicit, and the marker makes it
-        structural: if compact ever grows real work, a mid-sequence crash
-        fails read-only serves fast (StateInFlightError) instead of
-        serving a cross-store mix.  A crashed compact is retried by the
-        maintenance scheduler (idempotent — each rewrite keeps live rows
-        only); the retry re-sets and finally clears the marker."""
-        if self.read_only:
-            # refuse BEFORE touching the marker (ADVICE r13): a read_only
-            # compact must not strand a cross-store marker that blocks
-            # every serve until the writer's next write clears it
-            raise RuntimeError(
-                f"{self.path}: sink opened read_only (serving mode) — "
-                "compaction belongs to the maintenance process"
-            )
-        self._recover()
-        _set_marker(self._stores_marker)
-        if tombstone_horizon is not None:
-            self.index.compact(spark, tombstone_horizon)
-        for store in (self.postings, self.stats):
-            if store.exists():
-                kept = spark.read.parquet(store.path).filter(~F.col("dead"))
-                store.rewrite_all(kept.repartition(self.n_buckets, "bucket"))
-        _clear_marker(self._stores_marker)
-
-    def state_stats(self, spark: SparkSession) -> dict:
-        return {
-            "index": self.index.state_stats(spark),
-            "postings": self.postings.state_stats(spark),
-            "stats": self.stats.state_stats(spark),
-        }
-
-
-def _set_marker(path: str) -> None:
-    with open(path, "w") as fh:
-        fh.write(uuid.uuid4().hex)
-
-
-def _clear_marker(path: str) -> None:
-    try:
-        os.remove(path)
-    except OSError:
-        pass

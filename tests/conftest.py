@@ -88,7 +88,28 @@ SLOW_TESTS = {
 }
 
 
-def pytest_collection_modifyitems(config, items):
+def _collects_whole_suite(session, config) -> bool:
+    """True when this run collected all of tests/ with nothing filtered
+    out and no collection error — the only run that can tell a stale
+    SLOW_TESTS entry from a test that was merely not selected."""
+    if session.testsfailed or config.getoption("keyword") or config.getoption("markexpr"):
+        return False
+    if config.getoption("deselect", None) or config.getoption("ignore", None):
+        return False
+    here = os.path.dirname(os.path.abspath(__file__))
+    base = str(config.invocation_params.dir)
+    return here in {os.path.abspath(os.path.join(base, a)) for a in config.args}
+
+
+def pytest_collection_modifyitems(session, config, items):
+    if _collects_whole_suite(session, config):
+        names = {f"{item.fspath.basename}::{item.name}" for item in items}
+        stale = sorted(SLOW_TESTS - names)
+        if stale:
+            raise pytest.UsageError(
+                f"SLOW_TESTS entries match no collected test (renamed or "
+                f"removed? update tests/conftest.py): {stale}"
+            )
     run_slow = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") not in ("", "0")
     skip = pytest.mark.skip(reason="slow tier: set SPARK_GRAFT_SLOW_TESTS=1 to run")
     for item in items:

@@ -326,15 +326,19 @@ def test_no_forced_broadcast_hints_in_sink_source():
     carry no forced broadcast — AQE decides, so a giant availableNow
     first wave cannot push a corpus-sized broadcast.  Round 14 extends
     the pin to the neighbor and span sinks (the last instances of the
-    r12-flagged class, de-hinted per VERDICT r13 #1).  The ann_index
+    r12-flagged class, de-hinted per VERDICT r13 #1), and to the hourly
+    sink and the shared MultiStoreView/GroupedRecomputeView module that
+    now carries the session and hourly write path.  The ann_index
     centroid/codebook broadcasts are NOT covered: those frames are
     tiny constants (k centroids, 256-codeword tables), never
     batch-proportional."""
+    import cdc_platform_spark.streaming.hourly_index as hm
     import cdc_platform_spark.streaming.neighbor_index as nm
     import cdc_platform_spark.streaming.session_index as sm
     import cdc_platform_spark.streaming.span_index as pm
+    import cdc_platform_spark.streaming.views as vm
 
-    for m in (sm, pm, nm):
+    for m in (sm, hm, pm, nm, vm):
         src = open(m.__file__).read()
         assert "F.broadcast" not in src, m.__file__
 

@@ -2,9 +2,9 @@
 
 VERDICT r14 item 1: the driver flagged q10/q05/q26/q51 as regressed at 32
 cores, while the 8-core run and unchanged plan shapes said noise.  Settle it
-the way tools/ab_shuffle_writer.py settles config A/Bs: alternating fresh
-JVMs per arm (A = tree A, B = tree B), bench.py methodology inside each JVM
-(warm-up + min-of-N with GC between runs), min over all JVMs per arm.
+with alternating fresh JVMs per arm (A = tree A, B = tree B), bench.py
+methodology inside each JVM (warm-up + min-of-N with GC between runs), min
+over all JVMs per arm.
 
 Run:
   PYTHONPATH=/root/repo python tools/ab_trees.py \
